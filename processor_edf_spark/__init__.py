@@ -13,7 +13,8 @@ Layout
 ------
 - ``session``     SparkSession factory tuned for the target cluster
 - ``schemas``     canonical long-format / channel-metadata schemas
-- ``sources``     EDF binary decode (binaryFile + mapInPandas UDTF), parquet
+- ``sources``     EDF decode (record-aligned slices of the file listing +
+                  mapInPandas UDTF), parquet
 - ``operators``   calibration, timestamp synthesis, sessionization, channel
                   registry (band join), aggregations, dedup, similarity, text
 - ``functions``   scalar epoch/time helpers (reference utils.py parity)

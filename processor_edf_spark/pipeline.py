@@ -2,7 +2,8 @@
 
 The Spark lifecycle (SURVEY.md §3.4):
 
-    binaryFile scan → decode UDTF (mapInPandas) → long-format samples
+    (path, length) listing → [header probe, quarantine]
+      → record-aligned slice decode (mapInPandas) → long-format samples
       → [annotation filter, calibration — inside the decoder]
       → channel registry (band-join dedup, J1-J3)
       → gap sessionization (W1) + bounds/count aggregation (A1/A2)
@@ -10,14 +11,15 @@ The Spark lifecycle (SURVEY.md §3.4):
 
 Replaces the reference's eager single-file pipeline
 (processor/edf_processor/processor.py:10-69 + base_processor/base.py:40-53):
-one declarative plan, per-file decode is shuffle-free, and the only
-shuffles are the per-channel aggregations — which operate on partial
-states, not raw samples.
+one declarative plan; every stage reads header bytes or record-aligned
+byte ranges of the listed files (sources/edf.py), and the only shuffles
+are the spread of slice ids and the per-channel aggregations — which
+operate on partial states, not raw samples.
 
 Error handling: the reference swallows decode errors and publishes partial
 output (processor.py:66-69).  Here a malformed file fails its own task and
-is reported; use ``scan → decode`` per-file status if quarantine semantics
-are needed (SURVEY.md §2.10).
+is reported; ``quarantine=True`` drops the files the header probe rejects
+instead (SURVEY.md §2.10).
 """
 
 from __future__ import annotations
@@ -45,7 +47,6 @@ def process_edf_directory(
     input_dir: str,
     existing_channels: DataFrame | None = None,
     quarantine: bool = False,
-    samples_target_bytes: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Run the full EDF pipeline over a directory (any number of files —
     the reference's one-file limit, main.py:15-16, does not apply).
@@ -57,150 +58,18 @@ def process_edf_directory(
     ``quarantine=True`` drops files that fail the structural probe
     (``file_status``) instead of failing the job — the per-file status
     design of SURVEY.md §2.10 (the reference swallows errors and emits
-    partial output; we isolate them).  Use ``file_status(binary)`` to
-    report the quarantined set.
-
-    ``samples_target_bytes`` switches the WHOLE pipeline to the
-    record-aligned byte-range source (sources/edf_ranges.py) — samples,
-    annotations, chunk runs, signal headers, AND the quarantine probe:
-    one decode task per ~target_bytes of any file, removing both the
-    one-task-per-file ceiling and binaryFile's ~2 GB content cap at
-    EVERY stage (until r12 the metadata stages still materialized
-    whole-file content, so large recordings failed there even with the
-    ranged sample path on).  Headers and the quarantine probe read only
-    the 256+256·ns header bytes; annotations and chunk runs ride the
-    same record-aligned ranges as the sample decode (global record
-    indices via rec0; range-boundary runs coalesce in the existing
-    O(chunks) merge).  Output is bit-identical to the whole-file path
-    (tests/test_edf_ranges.py).
+    partial output; we isolate them).  Use
+    ``file_status(scan_edf_files(spark, input_dir))`` to report the
+    quarantined set.
     """
-    if samples_target_bytes is not None:
-        return _process_edf_directory_ranged(
-            spark,
-            input_dir,
-            existing_channels,
-            quarantine,
-            samples_target_bytes,
-        )
-    binary = scan_edf_files(spark, input_dir)
+    files = scan_edf_files(spark, input_dir)
     if quarantine:
-        good = file_status(binary).filter(F.col("ok")).select("path")
-        binary = binary.join(F.broadcast(good), "path")
-    samples = decode_samples(binary)
-    annotations = decode_annotations(binary)
-    headers = parse_signal_headers(binary)
-    chunk_runs = decode_chunk_runs(binary)
-    channels = build_channel_metadata(chunk_runs, headers, existing_channels)
-    return samples, channels, annotations
-
-
-class _PlanRegistry:
-    """Most recent persisted range plan, keyed by (SparkSession,
-    thread) under a lock: each new ranged run releases its OWN
-    predecessor's cache, so a long session running repeated jobs keeps
-    at most one plan's partitions cached per job thread — and two
-    concurrent ranged runs (driver threads, or two sessions in one
-    process) can no longer unpersist each other's live plan and force
-    the planner lineage (and its per-file header reads) to re-execute
-    (ADVICE r12).  Entries are O(job threads) small DataFrame handles;
-    the plan rows themselves are O(ranges) ~1 KB metadata.  Every
-    swap() also sweeps entries whose owning thread has died (ADVICE
-    r13: ad-hoc ThreadPoolExecutors running one ranged job per fresh
-    thread must not accumulate one persisted plan per dead thread),
-    restoring the old single-slot bound for the serial-driver case."""
-
-    def __init__(self):
-        import threading
-
-        self._lock = threading.Lock()
-        self._plans: dict[tuple, object] = {}
-
-    def swap(self, key, df):
-        """Install ``df`` as the key's live plan; return the list of
-        displaced plans (the key's previous plan plus any entries owned
-        by dead threads) for the caller to unpersist."""
-        import threading
-
-        live = {t.ident for t in threading.enumerate()}
-        with self._lock:
-            displaced = [self._plans.pop(key, None)]
-            displaced.extend(
-                self._plans.pop(k)
-                for k in [k for k in self._plans if k[1] not in live]
-            )
-            if df is not None:
-                self._plans[key] = df
-        return [d for d in displaced if d is not None]
-
-
-_RANGE_PLANS = _PlanRegistry()
-
-
-def _plan_key(spark: SparkSession) -> tuple:
-    import threading
-
-    return (id(spark), threading.get_ident())
-
-
-def _process_edf_directory_ranged(
-    spark: SparkSession,
-    input_dir: str,
-    existing_channels: DataFrame | None,
-    quarantine: bool,
-    target_bytes: int,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The byte-range flavor of the pipeline: every stage works from the
-    (path, length) listing + range reads; whole-file content is never
-    materialized, so executor memory is bounded by ``target_bytes`` at
-    any file size.  The range plan is built ONCE (and persisted by the
-    decode's task-count sizing) and shared by the samples, annotations,
-    and chunk-run scans — one header read per file for all three."""
-    from processor_edf_spark.sources.edf_ranges import (
-        decode_annotations_ranged,
-        decode_chunk_runs_ranged,
-        decode_samples_from_ranges,
-        file_status_ranged,
-        plan_edf_ranges,
-        signal_headers_from_plan,
-    )
-
-    from processor_edf_spark.sources.edf_ranges import edf_listing
-
-    listing = edf_listing(spark, input_dir)
-    if quarantine:
-        # header-only probe; corrupt headers excluded BEFORE the planner
-        good = (
-            file_status_ranged(spark, input_dir, listing=listing)
-            .filter(F.col("ok"))
-            .select("path")
-        )
-        listing = listing.join(F.broadcast(good), "path")
-    from pyspark import StorageLevel
-
-    ranges = plan_edf_ranges(
-        spark, input_dir, target_bytes=target_bytes, listing=listing
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # release the PREVIOUS invocation's persisted plan for THIS
-    # (session, thread) plus any plans stranded by dead job threads —
-    # long sessions running repeated jobs must not accumulate cached
-    # range partitions, while concurrent runs on other live
-    # threads/sessions keep their plans untouched
-    for prev in _RANGE_PLANS.swap(_plan_key(spark), ranges):
-        try:
-            prev.unpersist()
-        except Exception:  # session of the old plan may be gone
-            pass
-    # one metadata action materializes the plan (single header read per
-    # file); the explicit repartition spreads EVERY range scan one-per-
-    # task — same AQE-coalesce rationale as decode_samples_from_ranges
-    n_ranges = max(1, ranges.count())
-    samples = decode_samples_from_ranges(ranges, num_tasks=n_ranges)
-    annotations = decode_annotations_ranged(ranges.repartition(n_ranges))
-    # signal headers come from the PLAN's ride-along JSON — no second
-    # per-file header read (at a million-file listing the old
-    # scan_signal_headers_ranged doubled the small-read storm)
-    headers = signal_headers_from_plan(ranges)
-    chunk_runs = decode_chunk_runs_ranged(ranges.repartition(n_ranges))
+        good = file_status(files).filter(F.col("ok")).select("path")
+        files = files.join(F.broadcast(good), "path")
+    samples = decode_samples(files)
+    annotations = decode_annotations(files)
+    headers = parse_signal_headers(files)
+    chunk_runs = decode_chunk_runs(files)
     channels = build_channel_metadata(chunk_runs, headers, existing_channels)
     return samples, channels, annotations
 
@@ -229,9 +98,9 @@ def build_channel_metadata(
             "rate",
             F.lit("CONTINUOUS").alias("type"),
         )
-        # O(signals) rows, but derived from the binary scan via Python —
+        # O(signals) rows, but derived from the header reads via Python —
         # cache so the registry/mapping/output branches don't each
-        # re-scan and re-parse every file (this halved the metadata plan's
+        # re-read and re-parse every header (this halved the metadata plan's
         # wall time on a 32-file run)
         .cache()
     )

@@ -1,17 +1,16 @@
 """Round-11 analytics plans.
 
-``edf_range_decode`` puts the record-aligned byte-range EDF decode path
-(sources/edf_ranges.py — the r11 intra-file parallelism source) under
-the driver's value oracle: per distinct user a complete single-signal
-EDF file is synthesized from deterministic field values, the PRODUCTION
-``parse_edf_header`` → ``ranges_from_header`` → ``decode_range_bytes``
-chain splits it into 4-record ranges and decodes every range, and the
-oracle reproduces sample count, value sum, timestamp bounds, and range
-count arithmetically.  Any drift in the range math (overlapping or
-skipped records shift ``sum_value``/``n_samples``), the global-index
-timestamp formula (shifts ``t_max_usec``), or the calibration constants
-reds the row.  The filesystem half of the path (pyarrow.fs range reads,
-task spread) is pinned by tests/test_edf_ranges.py.
+``edf_range_decode`` puts the record-aligned slice arithmetic of the EDF
+source (sources/edf.py) under the driver's value oracle: per distinct
+user a complete single-signal EDF file is synthesized from deterministic
+field values, the PRODUCTION ``parse_edf_header`` → ``ranges_from_header``
+→ ``_decode_block`` chain splits it into 4-record slices and decodes every
+slice, and the oracle reproduces sample count, value sum, timestamp
+bounds, and slice count arithmetically.  Any drift in the range math
+(overlapping or skipped records shift ``sum_value``/``n_samples``), the
+global-index timestamp formula (shifts ``t_max_usec``), or the
+calibration constants reds the row.  The filesystem half of the path
+(pyarrow.fs range reads, task spread) is pinned by tests/test_edf_ranges.py.
 """
 
 from __future__ import annotations
@@ -54,8 +53,8 @@ _NR0 = (100, 125, 160, 200, 250)
     """,
 )
 def edf_range_decode(spark, sf_dir):
-    """Range-planned EDF decode under the value oracle (S4 via
-    sources/edf_ranges.py; reference whole-file semantics
+    """Slice-planned EDF decode under the value oracle (S4 via
+    sources/edf.py; reference whole-file semantics
     processor/edf_processor/edf.py:56-76).  Calibration is fixed at
     gain=1/bias=0 (phy==dig range) so decoded values equal the written
     digital samples exactly, and the sample pattern
@@ -78,9 +77,9 @@ def edf_range_decode(spark, sf_dir):
     users = events.select("user_id").distinct().repartition(n_width)
 
     def gen(batches):
-        from processor_edf_spark.sources.edf import parse_edf_header
-        from processor_edf_spark.sources.edf_ranges import (
-            decode_range_bytes,
+        from processor_edf_spark.sources.edf import (
+            _decode_block,
+            parse_edf_header,
             ranges_from_header,
         )
 
@@ -128,20 +127,23 @@ def edf_range_decode(spark, sf_dir):
                 content = g + sig + digital.tobytes()
 
                 h = parse_edf_header(content)  # the REAL parser
-                ranges = ranges_from_header(
-                    h, len(content), target_bytes=8 * nr0  # 4 records/range
-                )
-                # fold per-range batches incrementally (no concat:
+                ranges = [
+                    r
+                    for r in ranges_from_header(
+                        h, len(content), slice_bytes=8 * nr0  # 4 records/slice
+                    )
+                    if r[1]  # slices that own no record decode nothing
+                ]
+                # fold per-slice batches incrementally (no concat:
                 # the stats are associative, and this row is on the
                 # bench's hot list — pandas assembly was its cost)
                 n_s, s_v, t_lo, t_hi = 0, 0, None, None
-                for rec0, _n_rec, start_byte, n_bytes, rec_bytes, hj in ranges:
-                    for part in decode_range_bytes(  # the REAL kernel
-                        hj,
-                        content[start_byte : start_byte + n_bytes],
-                        rec_bytes,
-                        rec0,
-                        f"u{u}.edf",
+                for rec0, n_rec, start_byte, n_bytes in ranges:
+                    rec = np.frombuffer(
+                        content[start_byte : start_byte + n_bytes], dtype="<i2"
+                    ).reshape(n_rec, -1)
+                    for part in _decode_block(  # the REAL kernel
+                        h, rec, rec0, f"u{u}.edf"
                     ):
                         n_s += len(part)
                         s_v += int(part["value"].sum())

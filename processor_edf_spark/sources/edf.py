@@ -1,4 +1,5 @@
-"""EDF / EDF+C / EDF+D source: Spark-native binary ingestion.
+"""EDF / EDF+C / EDF+D source: record-aligned byte ranges from the file
+listing.
 
 European Data Format: a 256-byte fixed-width ASCII global header, then
 ``256 * nb_signal`` bytes of per-signal headers, then ``nb_data_rec``
@@ -13,19 +14,27 @@ Reference parity (all citations into /root/reference/):
 - start datetime Y2K pivot  processor/edf_processor/edf.py:99-103
 
 Spark-first design (NOT a port):
-- Ingestion is ``spark.read.format("binaryFile")`` — one row per file, so N
-  files decode on N executor cores with zero coordination.  The reference is
-  hard-limited to one file per process (main.py:15-16); here the same decode
-  scales horizontally to 100 TB of files.
-- The decode itself is a ``mapInPandas`` UDTF: binary row in → long-format
-  Arrow batches out.  Inside, decoding is one ``np.frombuffer('<i2')`` +
-  a reshape per file (fully vectorized) instead of the reference's
-  per-sample Python loop with O(n²) ``np.append`` (edf.py:73-76).
+- Every stage starts from the ``(path, length)`` file listing; no stage
+  ever materializes a file as one binary row, so there is no per-file
+  size cap and executor memory is bounded by ``SLICE_BYTES``.  The
+  reference is hard-limited to one file per process (main.py:15-16).
+- The status probe and the signal-header scan read only the
+  256+256·ns header bytes of each file.
+- The sample, chunk-run and annotation scans explode each file into
+  slice ids from its ``length`` alone (a small file is one slice), spread
+  the slice rows round-robin over the session's parallelism, and each
+  task reads the header plus one record-aligned byte range per slice
+  (``ranges_from_header``).  Timestamps do not depend on the split: the
+  contiguous formula uses the global sample index ``rec0·n_i + j``, and
+  EDF+D records each carry their own absolute TAL offset.
+- The decode itself is a ``mapInPandas`` UDTF.  Inside, decoding is one
+  ``np.frombuffer('<i2')`` + a reshape per slice (fully vectorized)
+  instead of the reference's per-sample Python loop with O(n²)
+  ``np.append`` (edf.py:73-76).
 - Batches are yielded per signal/record-window so executor memory stays
-  bounded regardless of file size (the reference holds the whole decoded
-  file in RAM).
-- Column pruning is pushed into the decoder via ``wanted_signals`` — the
-  UDTF analog of parquet column pruning (SURVEY.md §4).
+  bounded.  Column pruning is pushed into the decoder via
+  ``wanted_signals`` — the UDTF analog of parquet column pruning
+  (SURVEY.md §4).
 
 Known reference bugs intentionally NOT replicated:
 - ``data_signal`` is indexed by raw signal index even though annotation
@@ -34,13 +43,16 @@ Known reference bugs intentionally NOT replicated:
 - The contiguous-path time step is ``(n-1)/n × (1/rate)`` due to paging
   math (timeseries/base.py:357-369); we synthesize the ideal ``i/rate``
   spacing (within the tests' ±1% tolerance).
+- A zero calibration gain (``phy_min == phy_max``) divides by zero in the
+  reference; here the probe rejects it so the file is quarantined.
 """
 
 from __future__ import annotations
 
 import re
 from datetime import datetime, timezone
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
@@ -60,6 +72,9 @@ ANNOTATION_LABEL = "EDF Annotations"
 # memory: 2M rows ≈ 50 MB of Arrow buffers per in-flight batch.
 _BATCH_ROWS = 2_000_000
 
+# Bytes of a file one decode task owns: parquet-like 128 MiB splits.
+SLICE_BYTES = 128 * 1024 * 1024
+
 
 # ---------------------------------------------------------------------------
 # Pure-Python/numpy decode kernel (runs inside executors via mapInPandas)
@@ -76,26 +91,26 @@ def _fixed_fields(buf: bytes, width: int, n: int) -> list[bytes]:
     return re.findall(b".{1,%d}" % width, buf[: width * n])
 
 
-def parse_edf_header(content: bytes) -> dict:
+def parse_edf_header(raw: bytes) -> dict:
     """Parse the 256-byte global header + per-signal header arrays.
 
     Field layout per reference edf.py:34-55 (EDF spec fixed widths).
     """
     h = {
-        "version": _ascii(content[0:8]),
-        "patient_id": _ascii(content[8:88]),
-        "record_id": _ascii(content[88:168]),
-        "start_date": _ascii(content[168:176]),
-        "start_time": _ascii(content[176:184]),
-        "nb_bytes": int(content[184:192]),
-        "reserved": _ascii(content[192:236]),
-        "nb_data_rec": int(content[236:244]),
-        "duration": float(content[244:252]),
-        "nb_signal": int(content[252:256]),
+        "version": _ascii(raw[0:8]),
+        "patient_id": _ascii(raw[8:88]),
+        "record_id": _ascii(raw[88:168]),
+        "start_date": _ascii(raw[168:176]),
+        "start_time": _ascii(raw[176:184]),
+        "nb_bytes": int(raw[184:192]),
+        "reserved": _ascii(raw[192:236]),
+        "nb_data_rec": int(raw[236:244]),
+        "duration": float(raw[244:252]),
+        "nb_signal": int(raw[252:256]),
     }
     ns = h["nb_signal"]
     p = 256
-    sig = content[p : p + 256 * ns]
+    sig = raw[p : p + 256 * ns]
     off = 0
 
     def take(width: int, conv):
@@ -129,21 +144,49 @@ def edf_start_usec(start_date: str, start_time: str) -> int:
     return int(dt.timestamp() * USEC)
 
 
-def _record_matrix(content: bytes, h: dict) -> np.ndarray:
-    """All data records as an int16 matrix of shape (nb_data_rec, rec_len).
+def record_count(h: dict, length: int) -> int:
+    """Complete data records a file of ``length`` bytes holds: the
+    header's ``nb_data_rec`` capped by the file length (truncated files
+    decode their complete records), and every complete record when
+    ``nb_data_rec`` is -1, which the EDF spec allows to mean "unknown".
+    The one rule the slice arithmetic, the status probe and the header
+    rows share."""
+    rec_bytes = 2 * int(sum(h["nr_samples"]))
+    if rec_bytes <= 0:
+        return 0
+    avail = max(0, (length - h["header_bytes"]) // rec_bytes)
+    if h["nb_data_rec"] == -1:
+        return avail
+    return max(0, min(h["nb_data_rec"], avail))
 
-    One ``np.frombuffer`` for the whole data area — '<i2' natively gives the
-    two's-complement semantics the reference reimplements per sample
-    (edf.py:8-12 twos_comp of '<H' unpack).
-    """
-    rec_len = int(sum(h["nr_samples"]))
-    nb_rec = h["nb_data_rec"]
-    avail = (len(content) - h["header_bytes"]) // (2 * rec_len)
-    nb_rec = min(nb_rec, avail)  # tolerate truncated files
-    data = np.frombuffer(
-        content, dtype="<i2", count=nb_rec * rec_len, offset=h["header_bytes"]
-    )
-    return data.reshape(nb_rec, rec_len)
+
+def ranges_from_header(
+    h: dict, length: int, slice_bytes: int = SLICE_BYTES
+) -> list[tuple[int, int, int, int]]:
+    """Pure slice arithmetic: parsed header + file length →
+    ``(rec0, n_rec, start_byte, n_bytes)`` for each slice id
+    ``0 … ceil(length / slice_bytes) - 1`` (at least one).
+
+    Slice k owns the records whose offset in the data area lies in
+    ``[k·slice_bytes, (k+1)·slice_bytes)``, so the slice count follows
+    from the length alone while the ranges stay record-aligned, gap-free
+    and non-overlapping; a slice may own no record (``n_rec = 0``).
+    Pinned by tests/test_edf_ranges.py and value-checked end to end by
+    the ``edf_range_decode`` driver row."""
+    rec_bytes = 2 * int(sum(h["nr_samples"]))
+    n_rec = record_count(h, length)
+    n_slices = max(1, -(-length // slice_bytes))
+
+    def first_record(k: int) -> int:
+        return min(n_rec, -(-k * slice_bytes // rec_bytes)) if n_rec else 0
+
+    out = []
+    for k in range(n_slices):
+        lo, hi = first_record(k), first_record(k + 1)
+        out.append(
+            (lo, hi - lo, h["header_bytes"] + lo * rec_bytes, (hi - lo) * rec_bytes)
+        )
+    return out
 
 
 def _signal_offsets(nr_samples: list[int]) -> list[int]:
@@ -154,13 +197,21 @@ def _signal_offsets(nr_samples: list[int]) -> list[int]:
     return offs
 
 
+def _data_signals(h: dict) -> list[int]:
+    """Indices of the signals the decoder emits: every non-annotation
+    signal with samples (the annotation filter is reference P1)."""
+    return [
+        i
+        for i, label in enumerate(h["labels"])
+        if label != ANNOTATION_LABEL and h["nr_samples"][i] > 0
+    ]
+
+
 def _tal_offsets_from_matrix(rec: np.ndarray, h: dict) -> np.ndarray | None:
     """EDF+D per-record start offsets (seconds) from the first TAL of each
     record's annotation signal (reference edf.py:65-70: the bytes before the
-    first ``\\x14\\x14`` parse as a float offset).  Operates on a record
-    matrix so both the whole-file and the byte-range decode paths share it
-    — each data record carries its own TAL, so a record-aligned range is
-    timestamp-self-contained."""
+    first ``\\x14\\x14`` parse as a float offset).  Each data record carries
+    its own TAL, so a record-aligned range is timestamp-self-contained."""
     try:
         ann_idx = h["labels"].index(ANNOTATION_LABEL)
     except ValueError:
@@ -178,18 +229,32 @@ def _tal_offsets_from_matrix(rec: np.ndarray, h: dict) -> np.ndarray | None:
     return out
 
 
-def _tal_record_offsets(content: bytes, h: dict) -> np.ndarray | None:
-    return _tal_offsets_from_matrix(_record_matrix(content, h), h)
+def _record_offsets_usec(h: dict, rec: np.ndarray) -> np.ndarray | None:
+    if not h["is_discontiguous"]:
+        return None
+    tal = _tal_offsets_from_matrix(rec, h)
+    return None if tal is None else np.round(tal * USEC).astype(np.int64)
 
 
 def _calibration(h: dict, i: int) -> tuple[float, float]:
     """Linear calibration constants for signal i: physical = gain·digital +
     bias.  Algebraically identical to the reference's per-sample
     ``bit_value * (offset + digital)`` (edf.py:14-18) with the constants
-    hoisted out of the loop (Catalyst-style constant folding, done here
-    because the decode is the one place Python touches samples)."""
-    gain = (h["phy_max"][i] - h["phy_min"][i]) / (h["dig_max"][i] - h["dig_min"][i])
-    bias = gain * ((h["phy_max"][i] / gain) - h["dig_max"][i])
+    hoisted out of the loop.
+
+    Raises ``ValueError`` naming the signal when the constants are
+    unusable (a zero gain, or an empty or inverted digital range) — the
+    status probe runs this same check, so such a file is quarantined
+    instead of failing the decode."""
+    phy_min, phy_max = h["phy_min"][i], h["phy_max"][i]
+    dig_min, dig_max = h["dig_min"][i], h["dig_max"][i]
+    name = f"signal {i} {h['labels'][i]!r}"
+    if phy_max == phy_min:
+        raise ValueError(f"{name}: phy_max == phy_min ({phy_max:g}), zero calibration gain")
+    if dig_max <= dig_min:
+        raise ValueError(f"{name}: dig_max {dig_max:g} <= dig_min {dig_min:g}")
+    gain = (phy_max - phy_min) / (dig_max - dig_min)
+    bias = gain * ((phy_max / gain) - dig_max)
     return gain, bias
 
 
@@ -204,11 +269,13 @@ def _signal_timestamps(
     """Timestamps for signal i as an (nb_rec, n_i) int64 matrix — W3
     (contiguous, ideal spacing) or W4 (EDF+D per-record TAL offsets).
 
-    ``rec0`` is the global index of the first record in this block, so a
-    record-aligned byte range produces bit-identical timestamps to the
-    whole-file decode: the contiguous formula uses the GLOBAL sample index
-    ``(rec0·n_i … (rec0+nb_rec)·n_i)``, and the EDF+D path needs no offset
-    at all (each record's TAL already carries its absolute offset)."""
+    - contiguous (EDF/EDF+C): t_i = start + round(i·1e6/rate) over the
+      GLOBAL sample index ``rec0·n_i … (rec0+nb_rec)·n_i`` (reference W3,
+      timeseries/base.py:357-372 — ideal spacing, see module docstring)
+    - discontiguous (EDF+D): per record r with TAL offset o_r:
+      t_j = start + round(o_r·1e6 + j·1e6·duration/nr_samples)
+      (reference W4, edf.py:105-109, endpoint exclusive); needs no
+      ``rec0`` since each record's TAL carries its absolute offset."""
     n_i = h["nr_samples"][i]
     if rec_offsets_usec is not None:
         within = np.round(np.arange(n_i) * (h["duration"] * USEC / n_i)).astype(
@@ -222,27 +289,6 @@ def _signal_timestamps(
     return start_usec + np.round(idx * (USEC / rate)).astype(np.int64)
 
 
-def decode_edf_bytes(
-    path: str,
-    content: bytes,
-    wanted_signals: set[str] | None = None,
-) -> Iterator[pd.DataFrame]:
-    """Decode one EDF file into long-format sample batches.
-
-    Yields pandas DataFrames with SAMPLES_SCHEMA columns.  Timestamps:
-    - contiguous (EDF/EDF+C): t_i = start + round(i·1e6/rate)
-      (reference W3, timeseries/base.py:357-372 — ideal spacing, see module
-      docstring for the deliberate divergence)
-    - discontiguous (EDF+D): per record r with TAL offset o_r:
-      t_j = start + round(o_r·1e6 + j·1e6·duration/nr_samples)
-      (reference W4, edf.py:105-109, endpoint exclusive)
-    """
-    h = parse_edf_header(content)
-    rec = _record_matrix(content, h)
-    file_name = path.rsplit("/", 1)[-1]
-    yield from _decode_block(h, rec, 0, file_name, wanted_signals)
-
-
 def _decode_block(
     h: dict,
     rec: np.ndarray,
@@ -251,28 +297,20 @@ def _decode_block(
     wanted_signals: set[str] | None = None,
 ) -> Iterator[pd.DataFrame]:
     """Decode one record-aligned block (``rec`` = int16 matrix of records
-    ``rec0 … rec0+len(rec)``) into long-format sample batches.  Shared by
-    the whole-file path (rec0=0, all records) and the byte-range path —
-    the parity pin in tests/test_edf_ranges.py asserts bit-identical
-    output between the two."""
-    start_usec = edf_start_usec(h["start_date"], h["start_time"])
+    ``rec0 … rec0+len(rec)``) into long-format sample batches with
+    SAMPLES_SCHEMA columns."""
     nb_rec = rec.shape[0]
+    if nb_rec == 0:
+        return
+    start_usec = edf_start_usec(h["start_date"], h["start_time"])
     offs = _signal_offsets(h["nr_samples"])
+    rec_offsets_usec = _record_offsets_usec(h, rec)
 
-    rec_offsets_usec = None
-    if h["is_discontiguous"]:
-        tal = _tal_offsets_from_matrix(rec, h)
-        if tal is not None:
-            rec_offsets_usec = np.round(tal * USEC).astype(np.int64)
-
-    for i, label in enumerate(h["labels"]):
-        if label == ANNOTATION_LABEL:
-            continue  # predicate pushed into the scan (reference P1)
+    for i in _data_signals(h):
+        label = h["labels"][i]
         if wanted_signals is not None and label not in wanted_signals:
             continue  # column pruning pushed into the scan
         n_i = h["nr_samples"][i]
-        if n_i <= 0 or nb_rec == 0:
-            continue
         gain, bias = _calibration(h, i)
         digital = rec[:, offs[i] : offs[i] + n_i]  # (nb_rec, n_i) int16 view
         t_all = _signal_timestamps(
@@ -287,7 +325,7 @@ def _decode_block(
         # throughput at the Arrow/JVM boundary.  The dtypes are built
         # ONCE per signal: CategoricalDtype construction + category
         # validation was ~half the whole decode kernel when rebuilt per
-        # batch (profiled on the range-decode path).
+        # batch.
         file_dt = pd.CategoricalDtype([file_name])
         chan_dt = pd.CategoricalDtype([label])
         for r0 in range(0, nb_rec, rows_per_batch):
@@ -304,49 +342,31 @@ def _decode_block(
             )
 
 
-def chunk_run_rows(path: str, content: bytes) -> pd.DataFrame:
-    """Per-signal contiguous runs (W1 pushed into the scan): one row per
-    gap-free run — ``(file, channel, index, start, end, n_samples, rate)``.
-
-    Gap detection is inherently file-local (the decoder already holds the
-    whole timestamp axis), so computing it here — one ``np.diff`` per
-    signal — emits O(chunks) rows instead of shuffling O(samples) rows
-    through a per-channel window.  This is the aggregate-pushdown analog
-    of the reference's in-process ``discontinuous_chunks``
-    (timeseries/base.py:322-342), and the reason the channel-metadata plan
-    never moves sample rows at all.
-    """
-    h = parse_edf_header(content)
-    return chunk_run_rows_from_matrix(
-        path.rsplit("/", 1)[-1], h, _record_matrix(content, h), 0
-    )
-
-
 def chunk_run_rows_from_matrix(
     file_name: str, h: dict, rec: np.ndarray, rec0: int
 ) -> pd.DataFrame:
-    """Run detection over one record-aligned block (records
-    ``rec0 … rec0+len(rec)``) — shared by the whole-file path (rec0=0,
-    all records) and the byte-range path.  ``index`` is the run start's
-    GLOBAL position in the channel's sample array (``rec0·n_i + local``),
-    so per-range runs merge downstream exactly like per-file runs do
-    (merge_chunk_runs coalesces range-adjacent runs; the boundary gap of
-    two contiguous ranges is one sampling period, under the 2/rate
-    threshold)."""
-    start_usec = edf_start_usec(h["start_date"], h["start_time"])
-    nb_rec = rec.shape[0]
+    """Per-signal contiguous runs (W1 pushed into the scan) over one
+    record-aligned block: one row per gap-free run —
+    ``(file, channel, index, start, end, n_samples, rate)``.
 
-    rec_offsets_usec = None
-    if h["is_discontiguous"]:
-        tal = _tal_offsets_from_matrix(rec, h)
-        if tal is not None:
-            rec_offsets_usec = np.round(tal * USEC).astype(np.int64)
-
+    Gap detection needs only the block's own timestamp axis — one
+    ``np.diff`` per signal — so the scan emits O(chunks) rows instead of
+    shuffling O(samples) rows through a per-channel window.  This is the
+    aggregate-pushdown analog of the reference's in-process
+    ``discontinuous_chunks`` (timeseries/base.py:322-342).  ``index`` is
+    the run start's GLOBAL position in the channel's sample array
+    (``rec0·n_i + local``); runs of adjacent slices merge downstream in
+    ``merge_chunk_runs`` exactly like runs of adjacent files do (the
+    boundary gap of two contiguous slices is one sampling period, under
+    the 2/rate threshold)."""
     cols = {"file": [], "channel": [], "index": [], "start": [], "end": [], "n_samples": [], "rate": []}
-    for i, label in enumerate(h["labels"]):
+    nb_rec = rec.shape[0]
+    if nb_rec == 0:
+        return pd.DataFrame(cols)
+    start_usec = edf_start_usec(h["start_date"], h["start_time"])
+    rec_offsets_usec = _record_offsets_usec(h, rec)
+    for i in _data_signals(h):
         n_i = h["nr_samples"][i]
-        if label == ANNOTATION_LABEL or n_i <= 0 or nb_rec == 0:
-            continue
         rate = n_i / h["duration"]
         flat = _signal_timestamps(
             h, i, start_usec, nb_rec, rec_offsets_usec, rec0
@@ -357,7 +377,7 @@ def chunk_run_rows_from_matrix(
         ends = np.concatenate([bidx, [len(flat)]])
         for s, e in zip(starts, ends):
             cols["file"].append(file_name)
-            cols["channel"].append(label)
+            cols["channel"].append(h["labels"][i])
             cols["index"].append(int(rec0 * n_i + s))
             cols["start"].append(int(flat[s]))
             cols["end"].append(int(flat[e - 1]))
@@ -366,18 +386,14 @@ def chunk_run_rows_from_matrix(
     return pd.DataFrame(cols)
 
 
-def signal_header_rows(path: str, content: bytes) -> pd.DataFrame:
-    """One metadata row per signal (reference S2+S3)."""
-    return signal_header_rows_from_dict(path, parse_edf_header(content))
-
-
-def signal_header_rows_from_dict(path: str, h: dict) -> pd.DataFrame:
-    """S2+S3 rows from an already-parsed header dict — lets the ranged
-    pipeline derive signal headers from the range plan's ride-along
-    JSON instead of re-reading header bytes per file."""
+def signal_header_rows(path: str, h: dict, length: int) -> pd.DataFrame:
+    """One metadata row per signal (reference S2+S3) from a parsed header;
+    ``nb_data_rec``/``n_total_samples`` count the records the file of
+    ``length`` bytes holds (``record_count``)."""
     start_usec = edf_start_usec(h["start_date"], h["start_time"])
     file_name = path.rsplit("/", 1)[-1]
     n = h["nb_signal"]
+    nb_rec = record_count(h, length)
     return pd.DataFrame(
         {
             "file": [file_name] * n,
@@ -393,32 +409,23 @@ def signal_header_rows_from_dict(path: str, h: dict) -> pd.DataFrame:
             "nr_samples": np.array(h["nr_samples"], dtype=np.int32),
             "rate": [ns / h["duration"] for ns in h["nr_samples"]],
             "n_total_samples": np.array(
-                [ns * h["nb_data_rec"] for ns in h["nr_samples"]], dtype=np.int64
+                [ns * nb_rec for ns in h["nr_samples"]], dtype=np.int64
             ),
             "is_annotation": [lbl == ANNOTATION_LABEL for lbl in h["labels"]],
             "file_start_usec": np.int64(start_usec),
-            "nb_data_rec": np.int32(h["nb_data_rec"]),
+            "nb_data_rec": np.int32(nb_rec),
             "record_duration_sec": h["duration"],
             "is_discontiguous": h["is_discontiguous"],
         }
     )
 
 
-def annotation_rows(path: str, content: bytes) -> pd.DataFrame:
-    """Raw TAL segments per record (reference S5, edf.py:65-70)."""
-    h = parse_edf_header(content)
-    return annotation_rows_from_matrix(
-        path.rsplit("/", 1)[-1], h, _record_matrix(content, h), 0
-    )
-
-
 def annotation_rows_from_matrix(
     file_name: str, h: dict, rec: np.ndarray, rec0: int
 ) -> pd.DataFrame:
-    """TAL segments for one record-aligned block; ``record`` carries the
-    GLOBAL record index (``rec0 + local``), so per-range annotation rows
-    are identical to the whole-file rows (range parity pinned in
-    tests/test_edf_ranges.py)."""
+    """Raw TAL segments per record (reference S5, edf.py:65-70) for one
+    record-aligned block; ``record`` carries the GLOBAL record index
+    (``rec0 + local``), so the rows do not depend on the split."""
     cols = {"file": [], "record": [], "offset_sec": [], "raw": []}
     try:
         ann_idx = h["labels"].index(ANNOTATION_LABEL)
@@ -441,17 +448,56 @@ def annotation_rows_from_matrix(
 
 
 # ---------------------------------------------------------------------------
+# Byte-range reads (inside executors)
+# ---------------------------------------------------------------------------
+
+
+def _read_at(path: str, offset: int, n_bytes: int) -> bytes:
+    """Read ``n_bytes`` at ``offset`` from a file URI without touching the
+    rest of the file.  file:// short-circuits to a plain seek+read; every
+    other scheme goes through pyarrow.fs (hdfs://, s3://, gs:// … —
+    whatever Arrow filesystems the deployment provides)."""
+    parsed = urlparse(path)
+    if parsed.scheme in ("", "file"):
+        local = unquote(parsed.path) if parsed.scheme else path
+        with open(local, "rb") as f:
+            f.seek(offset)
+            return f.read(n_bytes)
+    return _read_at_arrow(path, offset, n_bytes)
+
+
+def _read_at_arrow(path: str, offset: int, n_bytes: int) -> bytes:
+    """The pyarrow.fs range read — split out so the local tests can
+    drive this exact code path through a file:// URI even though
+    ``_read_at`` short-circuits that scheme in production."""
+    from pyarrow import fs as pafs
+
+    filesystem, rel = pafs.FileSystem.from_uri(path)
+    with filesystem.open_input_file(rel) as f:
+        return f.read_at(n_bytes, offset)
+
+
+def _read_header(path: str) -> dict:
+    """Parse a file's header from its 256+256·ns header bytes alone."""
+    ns = max(0, int(_read_at(path, 252, 4)))
+    return parse_edf_header(_read_at(path, 0, 256 + 256 * ns))
+
+
+# ---------------------------------------------------------------------------
 # Spark-facing API
 # ---------------------------------------------------------------------------
 
 
 def scan_edf_files(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed EDF file scan (reference S1, main.py:7-16 — minus the
-    one-file limit).  Extension predicate is pushed to the file listing."""
+    """Distributed EDF file listing ``(path, length)`` (reference S1,
+    main.py:7-16 — minus the one-file limit).  The extension predicate is
+    pushed to the listing, and the binaryFile format prunes its content
+    column, so listing reads no file data."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.[eE][dD][fF]")
         .load(path)
+        .select("path", "length")
     )
 
 
@@ -461,30 +507,31 @@ FILE_STATUS_SCHEMA = (
 )
 
 
-def status_probe(path: str, header_content: bytes, n_bytes: int) -> tuple:
-    """One file's structural probe: header validation + data-area
-    consistency from the header and the FILE LENGTH alone — so the
-    whole-file path (header_content = full content) and the byte-range
-    path (header_content = the 256+256·ns header bytes) produce
-    identical status rows."""
+def status_probe(path: str, n_bytes: int) -> tuple:
+    """One file's structural probe from its header bytes and its LENGTH
+    alone: header validation, the calibration of every decoded signal,
+    and the complete-record count (``record_count``).  Any failure —
+    an unreadable file included — is a status row, never an exception."""
     name = path.rsplit("/", 1)[-1]
     try:
-        h = parse_edf_header(header_content)
+        h = _read_header(path)
         if h["nb_signal"] <= 0:
             raise ValueError("no signals")
         if h["duration"] <= 0:
             raise ValueError(f"non-positive record duration {h['duration']}")
+        if h["nb_data_rec"] < -1:
+            raise ValueError(f"negative record count {h['nb_data_rec']}")
         edf_start_usec(h["start_date"], h["start_time"])  # validates dates
-        rec_len = int(sum(h["nr_samples"]))
-        if rec_len <= 0:
+        if int(sum(h["nr_samples"])) <= 0:
             raise ValueError("empty data records")
-        avail = (n_bytes - h["header_bytes"]) // (2 * rec_len)
-        return (path, name, True, None, h["nb_signal"], min(h["nb_data_rec"], avail), n_bytes)
+        for i in _data_signals(h):
+            _calibration(h, i)
+        return (path, name, True, None, h["nb_signal"], record_count(h, n_bytes), n_bytes)
     except Exception as e:  # noqa: BLE001 — any parse failure quarantines
         return (path, name, False, f"{type(e).__name__}: {e}", None, None, n_bytes)
 
 
-def file_status(binary_df: DataFrame) -> DataFrame:
+def file_status(files: DataFrame) -> DataFrame:
     """Per-file decode status (SURVEY.md §2.10): validate header structure
     and data-area consistency WITHOUT decoding samples.
 
@@ -499,47 +546,85 @@ def file_status(binary_df: DataFrame) -> DataFrame:
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [
-                status_probe(path, bytes(content), len(content))
-                for path, content in zip(pdf["path"], pdf["content"])
+                status_probe(str(p), int(n))
+                for p, n in zip(pdf["path"], pdf["length"])
             ]
             yield pd.DataFrame(
                 rows,
                 columns=["path", "file", "ok", "error", "nb_signal", "nb_data_rec", "n_bytes"],
             )
 
-    return binary_df.select("path", "content").mapInPandas(
+    return files.select("path", "length").mapInPandas(
         gen, schema=FILE_STATUS_SCHEMA
     )
 
 
-def parse_signal_headers(binary_df: DataFrame) -> DataFrame:
-    """binaryFile rows → signal-header dimension table (S2/S3)."""
+def parse_signal_headers(files: DataFrame) -> DataFrame:
+    """File listing → signal-header dimension table (S2/S3), from the
+    header bytes of each file."""
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                yield signal_header_rows(path, bytes(content))
+            for p, n in zip(pdf["path"], pdf["length"]):
+                yield signal_header_rows(str(p), _read_header(str(p)), int(n))
 
-    return binary_df.select("path", "content").mapInPandas(
+    return files.select("path", "length").mapInPandas(
         gen, schema=SIGNAL_HEADERS_SCHEMA
     )
 
 
-def decode_samples(
-    binary_df: DataFrame, wanted_signals: set[str] | None = None
+def _map_slices(
+    files: DataFrame,
+    emit: Callable[[str, dict, np.ndarray, int], Iterable[pd.DataFrame]],
+    schema,
 ) -> DataFrame:
-    """binaryFile rows → long-format samples (S4 + W3/W4 + P1/P3/P4).
+    """The shape every record scan shares: explode each file into slice
+    ids from its length (``SLICE_BYTES`` as set when the plan is built),
+    spread the slice rows round-robin over the session's parallelism, and
+    per slice read the header and the slice's record range, then emit
+    ``emit(file_name, header, records, rec0)`` frames.
 
-    The returned plan is a narrow map over file rows — no shuffle; each file
-    decodes independently on its executor.
-    """
+    The explicit round-robin width keeps AQE from coalescing the few KB of
+    slice rows into one partition, which would serialize the decode they
+    expand into."""
+    slice_bytes = SLICE_BYTES
+    n_slices = F.greatest(F.lit(1), F.ceil(F.col("length") / F.lit(slice_bytes)))
+    slices = files.select(
+        "path",
+        "length",
+        F.explode(F.sequence(F.lit(0), n_slices.cast("int") - 1)).alias("slice"),
+    )
+    width = files.sparkSession.sparkContext.defaultParallelism
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                yield from decode_edf_bytes(path, bytes(content), wanted_signals)
+            for p, n, k in zip(pdf["path"], pdf["length"], pdf["slice"]):
+                p = str(p)
+                h = _read_header(p)
+                rec0, n_rec, start, n_bytes = ranges_from_header(
+                    h, int(n), slice_bytes
+                )[int(k)]
+                if n_rec == 0:
+                    continue
+                raw = _read_at(p, start, n_bytes)
+                rec = np.frombuffer(raw, dtype="<i2").reshape(n_rec, -1)
+                yield from emit(p.rsplit("/", 1)[-1], h, rec, rec0)
 
-    return binary_df.select("path", "content").mapInPandas(gen, schema=SAMPLES_SCHEMA)
+    return slices.repartition(width).mapInPandas(gen, schema=schema)
+
+
+def decode_samples(
+    files: DataFrame, wanted_signals: set[str] | None = None
+) -> DataFrame:
+    """File listing → long-format samples (S4 + W3/W4 + P1/P3/P4).
+
+    The plan is a map over slice rows: the only shuffle moves the slice
+    ids themselves, never samples."""
+    return _map_slices(
+        files,
+        lambda f, h, rec, rec0: _decode_block(h, rec, rec0, f, wanted_signals),
+        SAMPLES_SCHEMA,
+    )
 
 
 CHUNK_RUNS_SCHEMA = (
@@ -548,30 +633,22 @@ CHUNK_RUNS_SCHEMA = (
 )
 
 
-def decode_chunk_runs(binary_df: DataFrame) -> DataFrame:
-    """binaryFile rows → per-(file, signal) contiguous-run table (W1 at
+def decode_chunk_runs(files: DataFrame) -> DataFrame:
+    """File listing → per-(file, signal, slice) contiguous-run table (W1 at
     the source; O(chunks) rows, no sample movement)."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                yield chunk_run_rows(path, bytes(content))
-
-    return binary_df.select("path", "content").mapInPandas(
-        gen, schema=CHUNK_RUNS_SCHEMA
+    return _map_slices(
+        files,
+        lambda *block: [chunk_run_rows_from_matrix(*block)],
+        CHUNK_RUNS_SCHEMA,
     )
 
 
-def decode_annotations(binary_df: DataFrame) -> DataFrame:
-    """binaryFile rows → annotations table (S5)."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                yield annotation_rows(path, bytes(content))
-
-    return binary_df.select("path", "content").mapInPandas(
-        gen, schema=ANNOTATIONS_SCHEMA
+def decode_annotations(files: DataFrame) -> DataFrame:
+    """File listing → annotations table (S5)."""
+    return _map_slices(
+        files,
+        lambda *block: [annotation_rows_from_matrix(*block)],
+        ANNOTATIONS_SCHEMA,
     )
 
 

@@ -332,20 +332,61 @@ def edf_rows(spark, k: int) -> dict[str, float]:
     return out
 
 
-def edf_split_rows(spark, k: int) -> dict[str, float]:
-    """Intra-file parallelism evidence: ONE large EDF file (×k ≈ k·15 MB)
-    decoded (a) whole-file via binaryFile — one task per file, the
-    pre-r11 ceiling — vs (b) record-aligned 32 MB byte ranges
-    (sources/edf_ranges.py) — ~k/2 independent tasks over the SAME
-    bytes.  Warm second runs; the ranged path must win past one range
-    and hold samples/sec flat as the file grows."""
+def _slice_count(d: str, slice_bytes: int) -> int:
+    """Slices of the files in ``d`` that own at least one record."""
     import os
 
-    from processor_edf_spark.sources.edf import decode_samples, scan_edf_files
-    from processor_edf_spark.sources.edf_ranges import (
-        decode_samples_ranged,
-        plan_edf_ranges,
+    from processor_edf_spark.sources.edf import (
+        parse_edf_header,
+        ranges_from_header,
     )
+
+    n = 0
+    for f in os.listdir(d):
+        with open(f"{d}/{f}", "rb") as fh:
+            head = fh.read(256)
+            head += fh.read(256 * int(head[252:256]))
+        ranges = ranges_from_header(
+            parse_edf_header(head), os.path.getsize(f"{d}/{f}"), slice_bytes
+        )
+        n += sum(1 for r in ranges if r[1])
+    return n
+
+
+def _timed_decode(spark, d: str, slice_bytes: int) -> tuple[float, list]:
+    """Warm second run of the EDF source's sample decode at one slice
+    size → (seconds, [(partition id, samples)] of the decode tasks)."""
+    from pyspark.sql import functions as SF
+
+    from processor_edf_spark.sources import edf as edf_mod
+
+    saved = edf_mod.SLICE_BYTES
+    edf_mod.SLICE_BYTES = slice_bytes
+    try:
+        files = edf_mod.scan_edf_files(spark, d)
+        _noop(edf_mod.decode_samples(files))
+        t0 = time.perf_counter()
+        _noop(edf_mod.decode_samples(files))
+        sec = time.perf_counter() - t0
+        per_task = (
+            edf_mod.decode_samples(files)
+            .groupBy(SF.spark_partition_id().alias("pid"))
+            .count()
+            .collect()
+        )
+    finally:
+        edf_mod.SLICE_BYTES = saved
+    return sec, per_task
+
+
+def edf_split_rows(spark, k: int) -> dict[str, float]:
+    """Intra-file parallelism evidence: ONE large EDF file (×k ≈ k·15 MB)
+    decoded by the EDF source at 32 MB slices — the file spreads over
+    ~k/2 slices, each read and decoded by its own task.  Warm second runs;
+    samples/sec must hold flat as the file grows, and the decode must run
+    in min(parallelism, slices) tasks."""
+    import os
+
     from tests.edf_fixtures import write_edf_fast
 
     d = f"/tmp/edf_bigfile_x{k}"
@@ -354,45 +395,24 @@ def edf_split_rows(spark, k: int) -> dict[str, float]:
         write_edf_fast(f"{d}/big.edf", n_signals=16, rate=256, nb_rec=1800 * k)
     total = 16 * 256 * 1800 * k
     target = 32 * 1024 * 1024
-    out: dict[str, float] = {
+    sec, per_task = _timed_decode(spark, d, target)
+    return {
         "file_mb": round(os.path.getsize(f"{d}/big.edf") / 1e6, 1),
-        "n_ranges": plan_edf_ranges(spark, d, target_bytes=target).count(),
+        "n_slices": _slice_count(d, target),
+        "n_tasks": len(per_task),
+        "decode_sec": round(sec, 2),
+        "msamples_per_sec": round(total / sec / 1e6, 1),
     }
-
-    def whole():
-        _noop(decode_samples(scan_edf_files(spark, d)))
-
-    def ranged():
-        _noop(decode_samples_ranged(spark, d, target_bytes=target))
-
-    for tag, fn in (("whole_file", whole), ("ranged", ranged)):
-        fn()
-        t0 = time.perf_counter()
-        fn()
-        sec = time.perf_counter() - t0
-        out[f"{tag}_sec"] = round(sec, 2)
-        out[f"{tag}_msamples_per_sec"] = round(total / sec / 1e6, 1)
-    return out
 
 
 def edf_split_mixed_rows(spark, k: int) -> dict[str, float]:
-    """Mixed-corpus planner balance (r12): MANY small files + a FEW
-    large ones in ONE listing — the skewed-size mix a real archive has.
-    Pins (a) the ranged path stays ahead of whole-file when the corpus
-    is dominated by one big recording, and (b) planner task balance:
-    round-robin places exactly one range per task, so the max task
-    payload is one range (~target_bytes) regardless of file-size skew —
-    no straggler task carries a whole large file."""
+    """Mixed-corpus task balance: MANY small files + a FEW large ones in
+    ONE listing — the skewed-size mix a real archive has.  Times the EDF
+    source's decode at 8 MB slices and reports the heaviest decode task's
+    payload (its int16 samples): slices of the large recordings spread
+    round-robin, so no task carries a whole large file."""
     import os
 
-    from pyspark.sql import functions as SF
-
-    from processor_edf_spark.sources.edf import decode_samples, scan_edf_files
-    from processor_edf_spark.sources.edf_ranges import (
-        decode_samples_from_ranges,
-        decode_samples_ranged,
-        plan_edf_ranges,
-    )
     from tests.edf_fixtures import write_edf_fast
 
     n_small = 40
@@ -410,50 +430,18 @@ def edf_split_mixed_rows(spark, k: int) -> dict[str, float]:
                 nb_rec=450 * k, seed=100 + i,
             )
     target = 8 * 1024 * 1024
-    ranges = plan_edf_ranges(spark, d, target_bytes=target)
-    n_ranges = ranges.count()
-    total_mb = sum(
-        os.path.getsize(f"{d}/{f}") for f in os.listdir(d)
-    ) / 1e6
-    out: dict[str, float] = {
+    sec, per_task = _timed_decode(spark, d, target)
+    sizes = [os.path.getsize(f"{d}/{f}") for f in os.listdir(d)]
+    return {
         "n_files": n_small + 2,
-        "corpus_mb": round(total_mb, 1),
-        "n_ranges": n_ranges,
+        "corpus_mb": round(sum(sizes) / 1e6, 1),
+        "n_slices": _slice_count(d, target),
+        "decode_sec": round(sec, 2),
+        "n_tasks": len(per_task),
+        "max_task_mb": round(max(r["count"] for r in per_task) * 2 / 1e6, 1),
+        "slice_mb": round(target / 1e6, 1),
+        "largest_file_mb": round(max(sizes) / 1e6, 1),
     }
-
-    def whole():
-        _noop(decode_samples(scan_edf_files(spark, d)))
-
-    def ranged():
-        _noop(decode_samples_ranged(spark, d, target_bytes=target))
-
-    for tag, fn in (("whole_file", whole), ("ranged", ranged)):
-        fn()
-        t0 = time.perf_counter()
-        fn()
-        out[f"{tag}_sec"] = round(time.perf_counter() - t0, 2)
-    # task balance: after the decode's explicit round-robin repartition
-    # every task holds EXACTLY ONE range, so the heaviest task's input
-    # is one range (<= target_bytes) no matter how skewed the file
-    # sizes are — a whole-file scheduler would hand one task the whole
-    # large recording
-    per_task = (
-        ranges.repartition(n_ranges)
-        .withColumn("pid", SF.spark_partition_id())
-        .groupBy("pid")
-        .agg(SF.count("*").alias("n"), SF.sum("n_bytes").alias("b"))
-    ).collect()
-    out["n_tasks"] = len(per_task)
-    out["max_ranges_per_task"] = max(r["n"] for r in per_task)
-    out["max_task_mb"] = round(max(r["b"] for r in per_task) / 1e6, 1)
-    out["target_mb"] = round(target / 1e6, 1)
-    out["largest_file_mb"] = round(
-        max(
-            os.path.getsize(f"{d}/{f}") for f in os.listdir(d)
-        ) / 1e6,
-        1,
-    )
-    return out
 
 
 def ann_index_rows(spark, n_drops: int = 12, compact_at: int = 8) -> dict:

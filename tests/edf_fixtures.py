@@ -208,3 +208,15 @@ def write_edf_fast(
                 f.write(data[r].tobytes())
                 f.write(tal.ljust(tal_w, b"\x00"))
     return n_signals * rate * nb_rec
+
+
+def decode_whole_file(path: str, content: bytes):
+    """The source's decode kernel over all of one file's records as a
+    single block — for the kernel's batch-paging and memory tests."""
+    from processor_edf_spark.sources import edf as edf_mod
+
+    h = edf_mod.parse_edf_header(content)
+    rec = np.frombuffer(content, dtype="<i2", offset=h["header_bytes"])
+    return edf_mod._decode_block(
+        h, rec.reshape(h["nb_data_rec"], -1), 0, path.rsplit("/", 1)[-1]
+    )

@@ -16,7 +16,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tests.edf_fixtures import sine, write_edf
+from tests.edf_fixtures import decode_whole_file, sine, write_edf
 
 pytestmark = pytest.mark.slow
 
@@ -64,7 +64,7 @@ def test_kernel_pages_multiple_batches_per_signal(big_edfd, monkeypatch):
     tracemalloc.start()
     batches_per_channel: dict[str, int] = {}
     rows_per_channel: dict[str, int] = {}
-    for pdf in edf_mod.decode_edf_bytes(big_edfd, content):
+    for pdf in decode_whole_file(big_edfd, content):
         assert len(pdf) <= 200_000
         ch = str(pdf["channel"].iloc[0])
         batches_per_channel[ch] = batches_per_channel.get(ch, 0) + 1
@@ -84,12 +84,10 @@ def test_default_batch_bound_is_single_batch_at_this_scale(big_edfd):
     """At the production bound (2 M rows) a 497,400-sample signal fits
     one batch — the paging math (rows_per_batch = _BATCH_ROWS // n_i)
     never emits a partial record."""
-    from processor_edf_spark.sources import edf as edf_mod
-
     with open(big_edfd, "rb") as f:
         content = f.read()
     seen: dict[str, int] = {}
-    for pdf in edf_mod.decode_edf_bytes(big_edfd, content):
+    for pdf in decode_whole_file(big_edfd, content):
         ch = str(pdf["channel"].iloc[0])
         seen[ch] = seen.get(ch, 0) + 1
         assert len(pdf) % RATE == 0  # whole records only

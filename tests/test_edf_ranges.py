@@ -1,46 +1,67 @@
-"""Record-aligned byte-range EDF decode (sources/edf_ranges.py).
+"""Record-aligned slice decode (sources/edf.py).
 
-The contract: for ANY record-aligned split of a file, the ranged decode
-is bit-identical to the whole-file decode — same rows, same int64
-timestamps, same float64 values.  Reference semantics under test:
-processor/edf_processor/edf.py:56-76 (whole-file sample decode, which
-the whole-file path already parity-pins against goldens).
+The contract: for ANY slice size, every stage of the EDF source equals
+the independent pure-numpy reader in tests/edf_reference.py — same rows,
+same int64 timestamps, calibrated values to float rounding.  The tests
+run each stage at a slice size that splits the fixture files and at the
+default (one slice per small file).  Reference semantics under test:
+processor/edf_processor/edf.py:56-76 (whole-file sample decode).
 """
 
 from __future__ import annotations
+
+import glob
+import os
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from processor_edf_spark.sources.edf import decode_samples, scan_edf_files
-from processor_edf_spark.sources.edf_ranges import (
-    decode_samples_from_ranges,
-    decode_samples_ranged,
-    plan_edf_ranges,
+from processor_edf_spark.sources import edf as edf_mod
+from processor_edf_spark.sources.edf import (
+    decode_samples,
+    parse_edf_header,
+    ranges_from_header,
+    scan_edf_files,
 )
 from tests.edf_fixtures import sine, write_edf, write_edf_fast
+from tests.edf_reference import read_edf
+
+SMALL = 32 * 1024  # splits the fixture files into several slices
+SLICE_SIZES = (SMALL, edf_mod.SLICE_BYTES)
 
 
-def _collect_sorted(df) -> pd.DataFrame:
-    pdf = df.toPandas()
-    return (
-        pdf.sort_values(["file", "channel", "t_usec"])
-        .reset_index(drop=True)
-        .astype({"file": str, "channel": str})
+def _reference(d: str, key: str) -> pd.DataFrame:
+    return pd.concat(
+        [read_edf(p)[key] for p in sorted(glob.glob(os.path.join(d, "*.edf")))],
+        ignore_index=True,
     )
 
 
-def _assert_bit_identical(a, b) -> None:
-    pa, pb = _collect_sorted(a), _collect_sorted(b)
-    assert len(pa) == len(pb)
-    assert list(pa["file"]) == list(pb["file"])
-    assert list(pa["channel"]) == list(pb["channel"])
-    assert (pa["t_usec"].to_numpy() == pb["t_usec"].to_numpy()).all()
-    # bit-equal, not approx: both paths run the same kernel
-    av, bv = pa["value"].to_numpy(), pb["value"].to_numpy()
-    assert (av.view(np.int64) == bv.view(np.int64)).all()
+def _assert_same_samples(got: pd.DataFrame, want: pd.DataFrame) -> None:
+    got = got.sort_values(["file", "channel", "t_usec"]).reset_index(drop=True)
+    want = want.sort_values(["file", "channel", "t_usec"]).reset_index(drop=True)
+    assert len(got) == len(want)
+    assert list(got["file"]) == list(want["file"])
+    assert list(got["channel"]) == list(want["channel"])
+    assert (got["t_usec"].to_numpy() == want["t_usec"].to_numpy()).all()
+    # gain·d + bias vs the spec's pmin + (d − dmin)·gain: float rounding only
+    np.testing.assert_allclose(
+        got["value"].to_numpy(), want["value"].to_numpy(), rtol=1e-12, atol=1e-9
+    )
+
+
+def _assert_matches_reference(df, d: str, wanted: set[str] | None = None) -> None:
+    want = _reference(d, "samples")
+    if wanted is not None:
+        want = want[want["channel"].isin(wanted)]
+    _assert_same_samples(df.toPandas().astype({"file": str, "channel": str}), want)
+
+
+def _decode(spark, monkeypatch, d: str, slice_bytes: int, wanted=None):
+    monkeypatch.setattr(edf_mod, "SLICE_BYTES", slice_bytes)
+    return decode_samples(scan_edf_files(spark, d), wanted)
 
 
 @pytest.fixture(scope="module")
@@ -73,82 +94,71 @@ def edfd_dir(tmp_path_factory):
     return str(d)
 
 
-def test_range_plan_is_record_aligned(spark, edfc_dir):
-    rows = plan_edf_ranges(spark, edfc_dir, target_bytes=32 * 1024).collect()
-    assert len(rows) >= 8  # small target forces intra-file splits
-    by_path: dict[str, list] = {}
-    for r in rows:
-        by_path.setdefault(r.path, []).append(r)
-    for path, rs in by_path.items():
-        rs.sort(key=lambda r: r.rec0)
-        assert rs[0].rec0 == 0
-        for prev, nxt in zip(rs, rs[1:]):
-            assert prev.rec0 + prev.n_rec == nxt.rec0  # no gap, no overlap
-            assert prev.n_bytes == prev.n_rec * prev.rec_bytes
-            assert nxt.start_byte == prev.start_byte + prev.n_bytes
+def _header(path: str) -> tuple[dict, int]:
+    with open(path, "rb") as f:
+        raw = f.read()
+    return parse_edf_header(raw), len(raw)
 
 
-def test_ranged_decode_parity_edfc(spark, edfc_dir):
-    whole = decode_samples(scan_edf_files(spark, edfc_dir))
-    ranged = decode_samples_ranged(spark, edfc_dir, target_bytes=32 * 1024)
-    _assert_bit_identical(whole, ranged)
+def test_range_plan_is_record_aligned(edfc_dir):
+    n_slices = 0
+    for path in glob.glob(os.path.join(edfc_dir, "*.edf")):
+        h, length = _header(path)
+        rs = ranges_from_header(h, length, SMALL)
+        n_slices += len(rs)
+        assert len(rs) == -(-length // SMALL)  # slice count from length alone
+        rec_bytes = 2 * sum(h["nr_samples"])
+        assert rs[0][0] == 0
+        for (rec0, n_rec, start, n_bytes), nxt in zip(rs, rs[1:] + [None]):
+            assert start == h["header_bytes"] + rec0 * rec_bytes
+            assert n_bytes == n_rec * rec_bytes
+            if nxt is not None:
+                assert rec0 + n_rec == nxt[0]  # no gap, no overlap
+        assert rs[-1][0] + rs[-1][1] == h["nb_data_rec"]  # every record once
+    assert n_slices >= 8  # the small slice size forces intra-file splits
 
 
-def test_ranged_decode_parity_edfd(spark, edfd_dir):
-    whole = decode_samples(scan_edf_files(spark, edfd_dir))
-    ranged = decode_samples_ranged(spark, edfd_dir, target_bytes=16 * 1024)
-    _assert_bit_identical(whole, ranged)
+def test_ranged_decode_parity_edfc(spark, monkeypatch, edfc_dir):
+    for sb in SLICE_SIZES:
+        _assert_matches_reference(_decode(spark, monkeypatch, edfc_dir, sb), edfc_dir)
 
 
-def test_ranged_decode_spreads_across_tasks(spark, edfc_dir):
-    ranges = plan_edf_ranges(spark, edfc_dir, target_bytes=32 * 1024)
-    n_ranges = ranges.count()
-    assert n_ranges >= 8
-    decoded = decode_samples_from_ranges(ranges).withColumn(
-        "pid", F.spark_partition_id()
+def test_ranged_decode_parity_edfd(spark, monkeypatch, edfd_dir):
+    for sb in (16 * 1024, edf_mod.SLICE_BYTES):
+        _assert_matches_reference(_decode(spark, monkeypatch, edfd_dir, sb), edfd_dir)
+
+
+def test_ranged_decode_spreads_across_tasks(spark, monkeypatch, edfc_dir):
+    """A file larger than the slice size decodes in at least
+    min(session parallelism, its slice count) tasks, not one straggler."""
+    h, length = _header(os.path.join(edfc_dir, "b.edf"))
+    n_slices = len(ranges_from_header(h, length, SMALL))
+    assert n_slices >= 8
+    decoded = _decode(spark, monkeypatch, edfc_dir, SMALL).filter(
+        F.col("file") == "b.edf"
     )
-    n_tasks = decoded.select("pid").distinct().count()
-    # one file's records decode in MANY tasks, not one straggler
-    assert n_tasks >= min(8, n_ranges)
+    n_tasks = decoded.select(F.spark_partition_id()).distinct().count()
+    width = spark.sparkContext.defaultParallelism
+    assert n_tasks >= min(width, n_slices)
 
 
-def test_planner_executes_once_per_file(spark, edfc_dir):
-    """The r12 single-execution pin: plan + default-task-count decode
-    performs EXACTLY one header read per file.  The r11 shape ran the
-    uncached planner lineage twice (once for the sizing count, again
-    for the decode job) — 2x small-read storms on an object store at a
-    million-file listing; decode_samples_from_ranges now persists the
-    O(ranges) metadata rows around the count so the decode job reads
-    the cache instead of re-opening every header."""
-    acc = spark.sparkContext.accumulator(0)
-    ranges = plan_edf_ranges(
-        spark, edfc_dir, target_bytes=32 * 1024, header_reads_acc=acc
-    )
-    decoded = decode_samples_from_ranges(ranges)
-    assert decoded.count() > 0
-    assert acc.value == 2  # two files in the fixture dir, one read each
-
-
-def test_ranged_decode_single_range_per_file(spark, edfc_dir):
-    # big target → one range per file → still exact
-    ranges = plan_edf_ranges(spark, edfc_dir)
-    assert ranges.count() == 2
-    _assert_bit_identical(
-        decode_samples(scan_edf_files(spark, edfc_dir)),
-        decode_samples_from_ranges(ranges),
+def test_ranged_decode_single_range_per_file(spark, monkeypatch, edfc_dir):
+    # default slice size → one slice per small file → still exact
+    for path in glob.glob(os.path.join(edfc_dir, "*.edf")):
+        assert len(ranges_from_header(*_header(path))) == 1
+    _assert_matches_reference(
+        _decode(spark, monkeypatch, edfc_dir, edf_mod.SLICE_BYTES), edfc_dir
     )
 
 
-def test_ranged_decode_wanted_signals_pruning(spark, edfc_dir):
-    whole = decode_samples(scan_edf_files(spark, edfc_dir), {"EEG F1"})
-    ranged = decode_samples_ranged(
-        spark, edfc_dir, target_bytes=32 * 1024, wanted_signals={"EEG F1"}
-    )
-    assert ranged.select("channel").distinct().collect()[0][0] == "EEG F1"
-    _assert_bit_identical(whole, ranged)
+def test_ranged_decode_wanted_signals_pruning(spark, monkeypatch, edfc_dir):
+    for sb in SLICE_SIZES:
+        ranged = _decode(spark, monkeypatch, edfc_dir, sb, {"EEG F1"})
+        assert ranged.select("channel").distinct().collect()[0][0] == "EEG F1"
+        _assert_matches_reference(ranged, edfc_dir, {"EEG F1"})
 
 
-def test_ranged_decode_truncated_file(spark, tmp_path):
+def test_ranged_decode_truncated_file(spark, monkeypatch, tmp_path):
     d = tmp_path / "trunc"
     d.mkdir()
     p = d / "t.edf"
@@ -159,25 +169,56 @@ def test_ranged_decode_truncated_file(spark, tmp_path):
     )
     raw = p.read_bytes()
     p.write_bytes(raw[: len(raw) - 75])  # chop mid-record
-    whole = decode_samples(scan_edf_files(spark, str(d)))
-    ranged = decode_samples_ranged(spark, str(d), target_bytes=2 * 1024)
-    assert ranged.count() == 49 * 100  # only complete records decode
-    _assert_bit_identical(whole, ranged)
+    for sb in (2 * 1024, edf_mod.SLICE_BYTES):
+        ranged = _decode(spark, monkeypatch, str(d), sb)
+        assert ranged.count() == 49 * 100  # only complete records decode
+        _assert_matches_reference(ranged, str(d))
 
 
-def test_pipeline_ranged_samples_parity(spark, edfc_dir):
+def test_unknown_record_count_decodes_every_complete_record(
+    spark, monkeypatch, tmp_path
+):
+    """nb_data_rec = -1 means "unknown" in the EDF spec: every complete
+    record the file length holds decodes, and the status and header rows
+    report that count instead of -1."""
+    from processor_edf_spark.sources.edf import file_status, parse_signal_headers
+
+    d = tmp_path / "unknown"
+    d.mkdir()
+    p = d / "u.edf"
+    write_edf_fast(str(p), n_signals=2, rate=64, nb_rec=30, variant="EDF+D",
+                   gap_every=7, gap_sec=3.0)
+    raw = bytearray(p.read_bytes())
+    raw[236:244] = b"-1".ljust(8)
+    p.write_bytes(bytes(raw[:-100]))  # and cut into the last record
+    assert read_edf(str(p))["header"]["nb_rec"] == 29
+    for sb in (2 * 1024, edf_mod.SLICE_BYTES):
+        _assert_matches_reference(_decode(spark, monkeypatch, str(d), sb), str(d))
+    files = scan_edf_files(spark, str(d))
+    (status,) = file_status(files).collect()
+    assert status["ok"] and status["nb_data_rec"] == 29
+    assert {r["nb_data_rec"] for r in parse_signal_headers(files).collect()} == {29}
+
+    # any other negative count is a malformed header
+    raw[236:244] = b"-2".ljust(8)
+    p.write_bytes(bytes(raw))
+    (status,) = file_status(scan_edf_files(spark, str(d))).collect()
+    assert not status["ok"] and "negative record count -2" in status["error"]
+
+
+def test_pipeline_ranged_samples_parity(spark, monkeypatch, edfc_dir):
     from processor_edf_spark.pipeline import process_edf_directory
 
-    whole, ch_a, _ = process_edf_directory(spark, edfc_dir)
-    ranged, ch_b, _ = process_edf_directory(
-        spark, edfc_dir, samples_target_bytes=32 * 1024
-    )
-    _assert_bit_identical(whole, ranged)
-    # metadata path unchanged by the sample-source switch
-    assert ch_a.count() == ch_b.count()
+    counts = []
+    for sb in SLICE_SIZES:
+        monkeypatch.setattr(edf_mod, "SLICE_BYTES", sb)
+        samples, channels, _ = process_edf_directory(spark, edfc_dir)
+        _assert_matches_reference(samples, edfc_dir)
+        counts.append(channels.count())
+    assert counts[0] == counts[1] == 6
 
 
-def test_pipeline_ranged_quarantine_skips_corrupt(spark, tmp_path):
+def test_pipeline_ranged_quarantine_skips_corrupt(spark, monkeypatch, tmp_path):
     from processor_edf_spark.pipeline import process_edf_directory
 
     d = tmp_path / "q"
@@ -188,9 +229,8 @@ def test_pipeline_ranged_quarantine_skips_corrupt(spark, tmp_path):
         nb_data_rec=30,
     )
     (d / "bad.edf").write_bytes(b"not an edf at all" * 40)
-    samples, channels, _ = process_edf_directory(
-        spark, str(d), quarantine=True, samples_target_bytes=2 * 1024
-    )
+    monkeypatch.setattr(edf_mod, "SLICE_BYTES", 2 * 1024)
+    samples, channels, _ = process_edf_directory(spark, str(d), quarantine=True)
     assert samples.count() == 30 * 100  # the good file, fully decoded
     assert samples.select("file").distinct().collect()[0][0] == "good.edf"
 
@@ -199,10 +239,7 @@ def test_arrow_range_read_matches_local(tmp_path):
     """The pyarrow.fs branch of the range reader returns the same bytes
     as the plain-open fast path (driven through a file:// URI — the
     scheme production short-circuits, exercised here directly)."""
-    from processor_edf_spark.sources.edf_ranges import (
-        _read_at,
-        _read_at_arrow,
-    )
+    from processor_edf_spark.sources.edf import _read_at, _read_at_arrow
 
     p = tmp_path / "r.bin"
     p.write_bytes(bytes(range(256)) * 4)
@@ -212,8 +249,8 @@ def test_arrow_range_read_matches_local(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r12: ranged METADATA twins — the pipeline's >2 GB cap removal must
-# hold at EVERY stage, not just samples
+# Metadata stages: headers, status, annotations and chunk runs read the
+# same header bytes and record-aligned slices as the sample decode
 # ---------------------------------------------------------------------------
 
 
@@ -223,51 +260,48 @@ def _sorted_pdf(df, keys):
     )
 
 
-def test_ranged_annotations_parity(spark, edfc_dir, edfd_dir):
-    from processor_edf_spark.sources.edf import (
-        decode_annotations,
-        scan_edf_files,
-    )
-    from processor_edf_spark.sources.edf_ranges import (
-        decode_annotations_ranged,
-    )
+def test_ranged_annotations_parity(spark, monkeypatch, edfc_dir, edfd_dir):
+    from processor_edf_spark.sources.edf import decode_annotations
 
-    for d, tb in ((edfc_dir, 32 * 1024), (edfd_dir, 16 * 1024)):
-        whole = _sorted_pdf(
-            decode_annotations(scan_edf_files(spark, d)), ["file", "record"]
+    for d, small in ((edfc_dir, SMALL), (edfd_dir, 16 * 1024)):
+        want = _reference(d, "annotations")
+        for sb in (small, edf_mod.SLICE_BYTES):
+            monkeypatch.setattr(edf_mod, "SLICE_BYTES", sb)
+            got = _sorted_pdf(
+                decode_annotations(scan_edf_files(spark, d)), ["file", "record"]
+            )
+            assert list(got["file"]) == list(want["file"])
+            assert list(got["record"]) == list(want["record"])
+            assert list(got["raw"]) == list(want["raw"])
+            assert list(got["offset_sec"]) == list(want["offset_sec"])
+    assert len(_reference(edfd_dir, "annotations")) == 200
+
+
+def test_ranged_headers_parity(spark, edfc_dir, edfd_dir):
+    from processor_edf_spark.sources.edf import parse_signal_headers
+
+    for d in (edfc_dir, edfd_dir):
+        got = _sorted_pdf(
+            parse_signal_headers(scan_edf_files(spark, d)), ["file", "signal_idx"]
         )
-        ranged = _sorted_pdf(
-            decode_annotations_ranged(plan_edf_ranges(spark, d, target_bytes=tb)),
-            ["file", "record"],
-        )
-        assert list(whole["file"]) == list(ranged["file"])
-        assert list(whole["record"]) == list(ranged["record"])
-        assert list(whole["raw"]) == list(ranged["raw"])
-        wa = whole["offset_sec"].to_numpy()
-        ra = ranged["offset_sec"].to_numpy()
-        assert ((wa == ra) | (np.isnan(wa) & np.isnan(ra))).all()
-
-
-def test_ranged_headers_parity(spark, edfc_dir):
-    from processor_edf_spark.sources.edf import (
-        parse_signal_headers,
-        scan_edf_files,
-    )
-    from processor_edf_spark.sources.edf_ranges import (
-        scan_signal_headers_ranged,
-    )
-
-    keys = ["file", "signal_idx"]
-    whole = _sorted_pdf(
-        parse_signal_headers(scan_edf_files(spark, edfc_dir)), keys
-    )
-    ranged = _sorted_pdf(scan_signal_headers_ranged(spark, edfc_dir), keys)
-    pd.testing.assert_frame_equal(whole, ranged)
+        want = []
+        for path in sorted(glob.glob(os.path.join(d, "*.edf"))):
+            h = read_edf(path)["header"]
+            for i in range(h["ns"]):
+                want.append((
+                    os.path.basename(path), i, h["labels"][i], h["units"][i],
+                    h["pmin"][i], h["pmax"][i], h["dmin"][i], h["dmax"][i],
+                    h["nr"][i], h["nr"][i] / h["duration"], h["nr"][i] * h["nb_rec"],
+                    h["start_usec"], h["nb_rec"], h["discontiguous"],
+                ))
+        cols = ["file", "signal_idx", "label", "phy_dim", "phy_min", "phy_max",
+                "dig_min", "dig_max", "nr_samples", "rate", "n_total_samples",
+                "file_start_usec", "nb_data_rec", "is_discontiguous"]
+        assert [tuple(r) for r in got[cols].itertuples(index=False)] == want
 
 
 def test_ranged_file_status_parity(spark, tmp_path):
-    from processor_edf_spark.sources.edf import file_status, scan_edf_files
-    from processor_edf_spark.sources.edf_ranges import file_status_ranged
+    from processor_edf_spark.sources.edf import file_status
 
     d = tmp_path / "status"
     d.mkdir()
@@ -277,69 +311,64 @@ def test_ranged_file_status_parity(spark, tmp_path):
         nb_data_rec=20,
     )
     (d / "bad.edf").write_bytes(b"garbage bytes, not a header" * 30)
-    keys = ["file"]
-    whole = _sorted_pdf(file_status(scan_edf_files(spark, str(d))), keys)
-    ranged = _sorted_pdf(file_status_ranged(spark, str(d)), keys)
-    assert list(whole["ok"]) == list(ranged["ok"])
-    assert list(whole["nb_signal"].fillna(-1)) == list(
-        ranged["nb_signal"].fillna(-1)
-    )
-    assert list(whole["nb_data_rec"].fillna(-1)) == list(
-        ranged["nb_data_rec"].fillna(-1)
-    )
-    assert list(whole["n_bytes"]) == list(ranged["n_bytes"])
+    status = {r["file"]: r for r in file_status(scan_edf_files(spark, str(d))).collect()}
+    good = read_edf(str(d / "good.edf"))["header"]
+    assert status["good.edf"]["ok"] and status["good.edf"]["error"] is None
+    assert status["good.edf"]["nb_signal"] == good["ns"]
+    assert status["good.edf"]["nb_data_rec"] == good["nb_rec"] == 20
+    assert status["good.edf"]["n_bytes"] == os.path.getsize(d / "good.edf")
+    assert not status["bad.edf"]["ok"] and status["bad.edf"]["error"]
+    assert status["bad.edf"]["nb_signal"] is None
+    assert status["bad.edf"]["n_bytes"] == os.path.getsize(d / "bad.edf")
 
 
-def test_ranged_chunk_runs_merge_to_whole_file_runs(spark, edfd_dir):
-    """Per-range runs + the pipeline's merge window == whole-file runs:
-    range boundaries add NO spurious chunk boundaries (contiguous
-    ranges coalesce), and real EDF+D gaps survive."""
+def test_ranged_chunk_runs_merge_to_whole_file_runs(spark, monkeypatch, edfd_dir):
+    """Per-slice runs + the pipeline's merge window == the gap runs of
+    the reference timestamps: slice boundaries add NO spurious chunk
+    boundaries (contiguous slices coalesce), and real EDF+D gaps survive."""
     from processor_edf_spark.operators.sessionize import merge_chunk_runs
-    from processor_edf_spark.sources.edf import (
-        decode_chunk_runs,
-        scan_edf_files,
-    )
-    from processor_edf_spark.sources.edf_ranges import (
-        decode_chunk_runs_ranged,
-    )
+    from processor_edf_spark.sources.edf import decode_chunk_runs
 
-    whole = decode_chunk_runs(scan_edf_files(spark, edfd_dir))
-    ranged = decode_chunk_runs_ranged(
-        plan_edf_ranges(spark, edfd_dir, target_bytes=16 * 1024)
-    )
-    key = F.concat_ws("\x1f", "file", "channel")
-    merged = merge_chunk_runs(
-        ranged.withColumn("k", key), id_col="k", rate_col="rate"
-    )
-    base = merge_chunk_runs(
-        whole.withColumn("k", key), id_col="k", rate_col="rate"
-    )
-    a = _sorted_pdf(base, ["k", "start"])
-    b = _sorted_pdf(merged, ["k", "start"])
-    pd.testing.assert_frame_equal(a, b)
+    ref = _reference(edfd_dir, "samples")
+    want = []
+    for ch, g in ref.groupby("channel"):
+        t = g["t_usec"].to_numpy()
+        starts = np.concatenate([[0], np.flatnonzero(np.diff(t) > 2e6 / 64) + 1])
+        ends = np.concatenate([starts[1:], [len(t)]])
+        want += [(ch, int(s), int(t[s]), int(t[e - 1]), int(e - s))
+                 for s, e in zip(starts, ends)]
+    assert len(want) == 3 * 6  # 200 records, a gap before every 37th
+    for sb in (16 * 1024, edf_mod.SLICE_BYTES):
+        monkeypatch.setattr(edf_mod, "SLICE_BYTES", sb)
+        runs = decode_chunk_runs(scan_edf_files(spark, edfd_dir))
+        merged = merge_chunk_runs(runs, id_col="channel", rate_col="rate")
+        got = _sorted_pdf(merged, ["channel", "start"])
+        assert [
+            (r.channel, r.index, r.start, r.end, r.n_samples)
+            for r in got.itertuples(index=False)
+        ] == sorted(want)
 
 
-def test_pipeline_ranged_full_metadata_parity(spark, edfc_dir, edfd_dir):
-    """channels + annotations from the all-ranged pipeline are identical
-    to the whole-file pipeline (the r12 ADVICE fix: >2 GB recordings no
-    longer hit binaryFile content at ANY stage)."""
+def test_pipeline_ranged_full_metadata_parity(spark, monkeypatch, edfc_dir, edfd_dir):
+    """channels + annotations + samples from the pipeline do not depend on
+    the slice size, and the samples equal the reference reader's."""
     from processor_edf_spark.pipeline import channel_dicts, process_edf_directory
 
-    for d in (edfc_dir, edfd_dir):
-        s_a, ch_a, an_a = process_edf_directory(spark, d)
-        s_b, ch_b, an_b = process_edf_directory(
-            spark, d, samples_target_bytes=16 * 1024
-        )
-        da = sorted(channel_dicts(ch_a), key=lambda c: (c["name"],))
-        db = sorted(channel_dicts(ch_b), key=lambda c: (c["name"],))
-        for x in da + db:
-            x.pop("id", None)  # ids are registry-assigned, run-local
-        assert da == db
-        assert an_a.count() == an_b.count()
-        _assert_bit_identical(s_a, s_b)
+    for d, small in ((edfc_dir, SMALL), (edfd_dir, 16 * 1024)):
+        outputs = []
+        for sb in (small, edf_mod.SLICE_BYTES):
+            monkeypatch.setattr(edf_mod, "SLICE_BYTES", sb)
+            s, ch, an = process_edf_directory(spark, d)
+            _assert_matches_reference(s, d)
+            dicts = sorted(channel_dicts(ch), key=lambda c: (c["name"],))
+            for x in dicts:
+                x.pop("id", None)  # ids are registry-assigned, run-local
+            outputs.append((dicts, an.count()))
+        assert outputs[0] == outputs[1]
+        assert outputs[0][1] == len(_reference(d, "annotations"))
 
 
-def test_pipeline_ranged_quarantine_uses_header_probe(spark, tmp_path):
+def test_pipeline_ranged_quarantine_uses_header_probe(spark, monkeypatch, tmp_path):
     from processor_edf_spark.pipeline import process_edf_directory
 
     d = tmp_path / "q2"
@@ -350,17 +379,18 @@ def test_pipeline_ranged_quarantine_uses_header_probe(spark, tmp_path):
         variant="EDF+D", gap_every=11, gap_sec=2.0,
     )
     (d / "bad.edf").write_bytes(b"\x00" * 600)
+    monkeypatch.setattr(edf_mod, "SLICE_BYTES", 2 * 1024)
     samples, channels, annotations = process_edf_directory(
-        spark, str(d), quarantine=True, samples_target_bytes=2 * 1024
+        spark, str(d), quarantine=True
     )
     assert samples.count() == 30 * 100
-    # the ranged annotation scan sees only the quarantine survivors
+    # the annotation scan sees only the quarantine survivors
     assert annotations.select("file").distinct().count() == 1
 
 
 # ---------------------------------------------------------------------------
-# r12: property-based planner fuzz — for ANY header geometry and
-# truncation point, ranged decode == whole-file decode bit-for-bit
+# Property-based fuzz — for ANY header geometry, truncation point and
+# slice size, the decode equals the reference reader
 # ---------------------------------------------------------------------------
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402
@@ -380,18 +410,17 @@ from hypothesis import strategies as st  # noqa: E402
     rate=st.sampled_from([16, 57, 100, 128]),
     nb_rec=st.integers(min_value=1, max_value=40),
     variant=st.sampled_from(["EDF+C", "EDF+D"]),
-    target=st.sampled_from([256, 1024, 4096, 1 << 20]),
+    slice_bytes=st.sampled_from([256, 1024, 4096, 1 << 20]),
     chop=st.integers(min_value=0, max_value=300),
 )
-def test_planner_fuzz_ranged_equals_whole(
-    spark, tmp_path_factory, n_signals, rate, nb_rec, variant, target, chop
+def test_slice_fuzz_decode_equals_reference(
+    spark, monkeypatch, tmp_path_factory, n_signals, rate, nb_rec, variant,
+    slice_bytes, chop,
 ):
     """Random header geometry (signal counts, record sizes, EDF+C/+D),
-    random split target, random truncation: the record-aligned plan must
-    decode bit-identically to the whole-file path (today's parity tests
-    use fixed fixtures; this pins the planner ARITHMETIC itself —
-    ranges_from_header record math, rec0 timestamp propagation, TAL
-    self-containment, truncation tolerance)."""
+    random slice size, random truncation: the decode must equal the
+    reference reader — pins the slice arithmetic (record ownership, rec0
+    timestamp propagation, TAL self-containment, truncation tolerance)."""
     d = tmp_path_factory.mktemp("fuzz")
     path = str(d / "f.edf")
     write_edf_fast(
@@ -407,47 +436,16 @@ def test_planner_fuzz_ranged_equals_whole(
         raw = open(path, "rb").read()
         keep = max(256 + 256 * (n_signals + 1), len(raw) - chop)
         open(path, "wb").write(raw[:keep])
-    whole = decode_samples(scan_edf_files(spark, str(d)))
-    ranged = decode_samples_ranged(spark, str(d), target_bytes=target)
-    _assert_bit_identical(whole, ranged)
+    _assert_matches_reference(_decode(spark, monkeypatch, str(d), slice_bytes), str(d))
 
 
-def test_signal_headers_from_plan_parity(spark):
-    """Headers derived from the plan's ride-along JSON must equal the
-    header-read scan row-for-row (incl. the free-text fields that now
-    ride in the JSON) — the ranged pipeline issues ONE header read per
-    file for everything."""
-    from processor_edf_spark.sources.edf_ranges import (
-        plan_edf_ranges,
-        scan_signal_headers_ranged,
-        signal_headers_from_plan,
-    )
-
-    src = "/root/reference/sample_data"
-    ranges = plan_edf_ranges(spark, src, target_bytes=64 * 1024)
-    via_plan = signal_headers_from_plan(ranges)
-    via_read = scan_signal_headers_ranged(spark, src)
-    cols = via_read.columns
-    a = sorted(map(tuple, via_plan.select(cols).collect()))
-    b = sorted(map(tuple, via_read.select(cols).collect()))
-    assert a == b and len(a) > 0
-
-
-def test_zero_record_files_keep_headers_and_channels(spark, tmp_path):
+def test_zero_record_files_keep_headers_and_channels(spark, monkeypatch, tmp_path):
     """Files with a parseable header but NO decodable records — declared
-    nb_data_rec = 0, or truncated below one record — must not vanish
-    from the ranged pipeline's metadata stages (ADVICE r12: the plan
-    returned no rows for them, so signal_headers_from_plan lost their
-    signal-header/channel rows while the whole-file path kept them).
-    The planner now emits a zero-range metadata row; decoders skip it,
-    projections keep it — ranged output equals whole-file output on a
-    mixed directory."""
+    nb_data_rec = 0, or truncated below one record — keep their
+    signal-header and channel rows and decode no samples, at any slice
+    size."""
     from processor_edf_spark.pipeline import process_edf_directory
     from processor_edf_spark.sources.edf import parse_signal_headers
-    from processor_edf_spark.sources.edf_ranges import (
-        scan_signal_headers_ranged,
-        signal_headers_from_plan,
-    )
 
     d = tmp_path / "zr"
     d.mkdir()
@@ -455,31 +453,31 @@ def test_zero_record_files_keep_headers_and_channels(spark, tmp_path):
     # truncated below one record: header only
     write_edf_fast(str(d / "trunc.edf"), n_signals=3, rate=32, nb_rec=5)
     raw = (d / "trunc.edf").read_bytes()
-    hdr_bytes = 256 + 256 * 4  # 3 signals + EDF Annotations channel
-    (d / "trunc.edf").write_bytes(raw[:hdr_bytes])
+    hdr_bytes = 256 + 256 * 3
+    (d / "trunc.edf").write_bytes(raw[: hdr_bytes + 100])  # record is 192 B
     # declared zero records: patch nb_data_rec (bytes 236:244) to 0
     write_edf_fast(str(d / "zero.edf"), n_signals=2, rate=16, nb_rec=3)
     raw = bytearray((d / "zero.edf").read_bytes())
     raw[236:244] = b"0".ljust(8)
     (d / "zero.edf").write_bytes(bytes(raw))
 
-    # header parity: plan-derived == header-read scan == whole-file
-    ranges = plan_edf_ranges(spark, str(d), target_bytes=4096)
     cols = ["file", "signal_idx", "label", "rate"]
-    via_plan = sorted(map(tuple, signal_headers_from_plan(ranges).select(cols).collect()))
-    via_read = sorted(map(tuple, scan_signal_headers_ranged(spark, str(d)).select(cols).collect()))
-    whole_hdr = sorted(map(tuple, parse_signal_headers(
+    want = sorted(
+        (os.path.basename(p), i, h["labels"][i], h["nr"][i] / h["duration"])
+        for p in glob.glob(str(d / "*.edf"))
+        for h in [read_edf(p)["header"]]
+        for i in range(h["ns"])
+    )
+    got = sorted(map(tuple, parse_signal_headers(
         scan_edf_files(spark, str(d))).select(cols).collect()))
-    assert via_plan == via_read == whole_hdr
-    assert {t[0] for t in via_plan} == {"normal.edf", "trunc.edf", "zero.edf"}
+    assert got == want
+    assert {t[0] for t in got} == {"normal.edf", "trunc.edf", "zero.edf"}
+    assert [read_edf(str(d / f))["header"]["nb_rec"] for f in ("trunc.edf", "zero.edf")] == [0, 0]
 
-    # full-pipeline parity: channels AND samples identical across paths
-    s_w, c_w, _ = process_edf_directory(spark, str(d))
-    s_r, c_r, _ = process_edf_directory(
-        spark, str(d), samples_target_bytes=4096
-    )
-    ccols = sorted(set(c_w.columns) & set(c_r.columns))
-    assert sorted(map(tuple, c_w.select(ccols).collect())) == sorted(
-        map(tuple, c_r.select(ccols).collect())
-    )
-    _assert_bit_identical(s_w, s_r)
+    channels = []
+    for sb in (4096, edf_mod.SLICE_BYTES):
+        monkeypatch.setattr(edf_mod, "SLICE_BYTES", sb)
+        s, c, _ = process_edf_directory(spark, str(d))
+        _assert_matches_reference(s, str(d))
+        channels.append(sorted(map(tuple, c.drop("id").collect())))
+    assert channels[0] == channels[1]

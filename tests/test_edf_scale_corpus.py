@@ -102,6 +102,7 @@ def test_many_file_decode_stays_single_pass(tmp_path):
     import tracemalloc
 
     from processor_edf_spark.sources import edf as edf_mod
+    from tests.edf_fixtures import decode_whole_file
 
     n_files, n_signals, rate, nb_rec = 8, 8, 256, 400
     total = _mixed_corpus(str(tmp_path), n_files, n_signals, rate, nb_rec)
@@ -118,7 +119,7 @@ def test_many_file_decode_stays_single_pass(tmp_path):
         for path in sorted(glob.glob(f"{tmp_path}/*.edf")):
             with open(path, "rb") as f:
                 content = f.read()
-            for pdf in edf_mod.decode_edf_bytes(path, content):
+            for pdf in decode_whole_file(path, content):
                 assert len(pdf) <= batch_bound
                 rows += len(pdf)
         _, peak = tracemalloc.get_traced_memory()

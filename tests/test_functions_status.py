@@ -177,6 +177,54 @@ def test_file_status_and_quarantine(spark, tmp_path):
     assert samples.select("file").distinct().collect()[0]["file"] == "good.edf"
 
 
+def test_zero_gain_calibration_is_quarantined(spark, tmp_path):
+    """A decoded signal with phy_max == phy_min (a zero calibration gain)
+    or dig_max <= dig_min fails the status probe with a reason naming the
+    signal; quarantine=True drops the file instead of dividing by zero,
+    and without quarantine the decode raises the same reason."""
+    def patch_signal_field(path, ns, field_offset, i, value):
+        raw = bytearray(open(path, "rb").read())
+        at = 256 + field_offset * ns + 8 * i
+        raw[at : at + 8] = value.ljust(8).encode()
+        open(path, "wb").write(bytes(raw))
+
+    sigs = [
+        {"label": "chanA", "rate": 100, "gen": sine(5.0)},
+        {"label": "chanB", "rate": 100, "gen": sine(3.0)},
+    ]
+    write_edf(str(tmp_path / "good.edf"), signals=sigs, nb_data_rec=2)
+    write_edf(str(tmp_path / "flat.edf"), signals=sigs, nb_data_rec=2)
+    patch_signal_field(str(tmp_path / "flat.edf"), 2, 104, 1, "1000")  # phy_min = phy_max
+    write_edf(str(tmp_path / "dig.edf"), signals=sigs, nb_data_rec=2)
+    patch_signal_field(str(tmp_path / "dig.edf"), 2, 128, 0, "-32768")  # dig_max = dig_min
+
+    status = {
+        r["file"]: r
+        for r in file_status(scan_edf_files(spark, str(tmp_path))).collect()
+    }
+    assert status["good.edf"]["ok"]
+    assert not status["flat.edf"]["ok"]
+    assert "signal 1 'chanB'" in status["flat.edf"]["error"]
+    assert "phy_max == phy_min" in status["flat.edf"]["error"]
+    assert not status["dig.edf"]["ok"]
+    assert "signal 0 'chanA'" in status["dig.edf"]["error"]
+    assert "dig_max" in status["dig.edf"]["error"]
+
+    samples, channels, _ = process_edf_directory(
+        spark, str(tmp_path), quarantine=True
+    )
+    assert samples.count() == 2 * 2 * 100
+    assert {r["file"] for r in channels.collect()} == {"good.edf"}
+
+    from pyspark.errors import PythonException
+
+    (tmp_path / "good.edf").unlink()
+    (tmp_path / "dig.edf").unlink()
+    samples, _, _ = process_edf_directory(spark, str(tmp_path))
+    with pytest.raises(PythonException, match="phy_max == phy_min"):
+        samples.count()
+
+
 def test_ntz_epoch_us_matches_duckdb(spark):
     """The engine's canonical epoch-µs derivation is registry.TS_US:
     ``unix_micros(cast(ts AS timestamp))`` over a TIMESTAMP_NTZ column

@@ -15,8 +15,6 @@ from __future__ import annotations
 import os
 
 import pytest
-
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from processor_edf_spark.schemas import SAMPLES_SCHEMA
@@ -44,6 +42,7 @@ def _run_stream(df, name: str, checkpoint: str):
     return q
 
 
+@pytest.mark.slow
 def test_streaming_channel_registry_state(spark, tmp_path):
     """Micro-batch 1 registers channels; micro-batch 2 must band-match the
     SAME ids out of state (±2% rate) and register out-of-band rates anew."""
@@ -83,6 +82,7 @@ def test_streaming_channel_registry_state(spark, tmp_path):
     assert by[("eeg f4", 250)]["is_new"]
 
 
+@pytest.mark.slow
 def test_session_windowed_chunks_stream(spark, tmp_path):
     """Gap > 2/rate splits sessions; closed sessions emit once the
     watermark passes (streaming analog of contiguousChunks)."""
@@ -137,6 +137,7 @@ def test_stream_edf_end_to_end(spark, tmp_path):
     assert out[0]["n_samples"] == 200
 
 
+@pytest.mark.slow
 def test_quarantine_flags_regression(spark):
     """A row whose timestamp regresses below the running max of earlier
     arrivals is tagged; in-order and equal timestamps are not (the
@@ -155,6 +156,7 @@ def test_quarantine_flags_regression(spark):
     assert [r["out_of_order"] for r in out] == [False, False, True, False, False]
 
 
+@pytest.mark.slow
 def test_dedup_stream_exact(spark, tmp_path):
     """Streaming ingest dedup: within the watermark horizon, later
     arrivals of identical content are dropped; distinct content passes.
@@ -185,6 +187,7 @@ def test_dedup_stream_exact(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_enrich_stream_static_join(spark, tmp_path):
     """Stream-static join: each micro-batch broadcast-joins the static
     dimension; rows without a dim match survive (left join), and the
@@ -211,6 +214,7 @@ def test_enrich_stream_static_join(spark, tmp_path):
     assert rows[3]["weight"] is None  # left join keeps unmatched stream rows
 
 
+@pytest.mark.slow
 def test_tumbling_counts_stream_watermark(spark, tmp_path):
     """Watermarked tumbling agg: closed windows emit once; a window still
     inside the watermark horizon at end-of-input never emits (append
@@ -242,6 +246,7 @@ def test_tumbling_counts_stream_watermark(spark, tmp_path):
     assert (r["event_type"], r["n_events"], r["sum_value"]) == ("click", 2, 3.0)
 
 
+@pytest.mark.slow
 def test_interval_join_streams(spark, tmp_path):
     """Stream-stream interval join: only (click, purchase) pairs with the
     purchase inside [click, click + 1h] on the same user match; the
@@ -274,6 +279,7 @@ def test_interval_join_streams(spark, tmp_path):
     assert rows[0]["user_id"] == 1
 
 
+@pytest.mark.slow
 def test_stream_corpus_ingest_composition(spark, tmp_path):
     """The document-side streaming composition: watermarked content
     dedup + token gate + PII audit/scrub in one incremental query —
@@ -308,6 +314,7 @@ def test_stream_corpus_ingest_composition(spark, tmp_path):
     assert got[4]["clean_text"] == got[4]["text"]
 
 
+@pytest.mark.slow
 def test_stream_checkpoint_incremental_restart(spark, tmp_path):
     """Restarting an availableNow query against the same checkpoint must
     process ONLY files that landed since the last run — the exactly-once
@@ -353,6 +360,7 @@ def test_stream_checkpoint_incremental_restart(spark, tmp_path):
     assert sorted(out) == [1, 2]
 
 
+@pytest.mark.slow
 def test_stream_corpus_ingest_dedups_normalized_variants(spark, tmp_path):
     """With normalize=True (the default), a whitespace/case mutation of
     an already-seen document dedups on the stream — the same
@@ -382,6 +390,7 @@ def test_stream_corpus_ingest_dedups_normalized_variants(spark, tmp_path):
     assert got == [1, 3]  # the normalized twin (2) deduped
 
 
+@pytest.mark.slow
 def test_stream_funnel_parity_with_batch_query(spark, tmp_path):
     """Stream/batch parity: the stateful streaming funnel over the
     sf0.001 events (one in-order availableNow pass) must yield exactly
@@ -428,6 +437,7 @@ def test_stream_funnel_parity_with_batch_query(spark, tmp_path):
         assert got == batch[stage], (stage, got, batch[stage])
 
 
+@pytest.mark.slow
 def test_stream_funnel_state_carries_across_drops(spark, tmp_path):
     """State persists across micro-batches: a user's progression
     completes over two drops, and a late event older than an

@@ -1240,7 +1240,7 @@ N_EDF_INGEST_SEEDS = 3
 
 
 @pytest.mark.parametrize("seed", range(N_EDF_INGEST_SEEDS))
-def test_stream_edf_ingest_differential(spark, tmp_path, seed):
+def test_stream_edf_ingest_differential(spark, tmp_path, monkeypatch, seed):
     """EDF files land in WAVES — including a late straggler that
     arrives only after the first availableNow pass already committed —
     and every wave is caught up with trigger(availableNow=True) over
@@ -1251,12 +1251,12 @@ def test_stream_edf_ingest_differential(spark, tmp_path, seed):
       equals the batch count, so churn cannot double wave-1 samples);
     - the accumulated streamed sample multiset equals the BATCH
       pipeline recomputed over the final directory, row for row —
-      in both the whole-file flavor and the record-aligned ranged
-      flavor (samples_target_bytes small enough to split files), which
-      are bit-identical to each other by the r12 contract."""
+      at the default slice size (one slice per file) and at a slice
+      size small enough to split every file."""
     import math
 
     from processor_edf_spark.pipeline import process_edf_directory
+    from processor_edf_spark.sources import edf as edf_mod
     from processor_edf_spark.streaming.sessions import (
         stream_edf_directory,
     )
@@ -1308,9 +1308,8 @@ def test_stream_edf_ingest_differential(spark, tmp_path, seed):
         .withColumn("file", F.element_at(F.split("file", "/"), -1))
     )
     batch, _ch, _ann = process_edf_directory(spark, str(in_dir))
-    ranged, _chr, _annr = process_edf_directory(
-        spark, str(in_dir), samples_target_bytes=512
-    )
+    monkeypatch.setattr(edf_mod, "SLICE_BYTES", 512)
+    ranged, _chr, _annr = process_edf_directory(spark, str(in_dir))
 
     def rows(df):
         return sorted(
