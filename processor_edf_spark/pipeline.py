@@ -2,9 +2,10 @@
 
 The Spark lifecycle (SURVEY.md §3.4):
 
-    (path, length) listing → [header probe, quarantine]
+    (path, length) listing
       → record-aligned slice decode (mapInPandas) → long-format samples
-      → [annotation filter, calibration — inside the decoder]
+      → [header probe + quarantine, annotation filter, calibration —
+         inside the decoder]
       → channel registry (band-join dedup, J1-J3)
       → gap sessionization (W1) + bounds/count aggregation (A1/A2)
       → channels metadata + parquet/JSON sinks
@@ -19,7 +20,9 @@ operate on partial states, not raw samples.
 Error handling: the reference swallows decode errors and publishes partial
 output (processor.py:66-69).  Here a malformed file fails its own task and
 is reported; ``quarantine=True`` drops the files the header probe rejects
-instead (SURVEY.md §2.10).
+instead (SURVEY.md §2.10).  The probe runs inside each scan task on the
+header it reads anyway, so every returned plan has one Python scan per
+source and no join against the status table.
 """
 
 from __future__ import annotations
@@ -36,7 +39,6 @@ from processor_edf_spark.sources.edf import (
     decode_annotations,
     decode_chunk_runs,
     decode_samples,
-    file_status,
     parse_signal_headers,
     scan_edf_files,
 )
@@ -56,20 +58,23 @@ def process_edf_directory(
     matching (J1), the batch equivalent of reference mode='append'
     (timeseries/base.py:129-135).
     ``quarantine=True`` drops files that fail the structural probe
-    (``file_status``) instead of failing the job — the per-file status
+    (``probe_header``) instead of failing the job — the per-file status
     design of SURVEY.md §2.10 (the reference swallows errors and emits
-    partial output; we isolate them).  Use
+    partial output; we isolate them).  Each scan runs the probe on the
+    header it has already read, so the samples and annotations plans are
+    one Python scan each and no plan joins against a probe.  Use
     ``file_status(scan_edf_files(spark, input_dir))`` to report the
-    quarantined set.
+    quarantined set (the same check, so the same files).
+
+    The channel plan's header-derived frames are checkpointed lazily for
+    this call only, and building them runs their shuffle stages (the
+    header scan and the registry match) before this function returns.
     """
     files = scan_edf_files(spark, input_dir)
-    if quarantine:
-        good = file_status(files).filter(F.col("ok")).select("path")
-        files = files.join(F.broadcast(good), "path")
-    samples = decode_samples(files)
-    annotations = decode_annotations(files)
-    headers = parse_signal_headers(files)
-    chunk_runs = decode_chunk_runs(files)
+    samples = decode_samples(files, quarantine=quarantine)
+    annotations = decode_annotations(files, quarantine=quarantine)
+    headers = parse_signal_headers(files, quarantine=quarantine)
+    chunk_runs = decode_chunk_runs(files, quarantine=quarantine)
     channels = build_channel_metadata(chunk_runs, headers, existing_channels)
     return samples, channels, annotations
 
@@ -99,12 +104,16 @@ def build_channel_metadata(
             F.lit("CONTINUOUS").alias("type"),
         )
         # O(signals) rows, but derived from the header reads via Python —
-        # cache so the registry/mapping/output branches don't each
-        # re-read and re-parse every header (this halved the metadata plan's
-        # wall time on a 32-file run)
-        .cache()
+        # checkpoint so the registry/mapping/output branches don't each
+        # re-read and re-parse every header.  A lazy local checkpoint is
+        # reuse that lasts this call: ``.cache()`` is matched by plan, and
+        # a file listing compares equal by its root path, so a later call
+        # on a grown directory would get this call's headers back.
+        .localCheckpoint(eager=False)
     )
-    registry = get_or_create_channels(signal_dim, existing_channels).cache()
+    registry = get_or_create_channels(signal_dim, existing_channels).localCheckpoint(
+        eager=False
+    )
 
     # Merge path: several files can carry the SAME channel (reference
     # append semantics, base.py:129-221 — samples accumulate, bounds
@@ -256,9 +265,11 @@ def channel_dicts(channels: DataFrame) -> list[dict]:
     run collects millions of short rows at most — if channels ever
     stopped being a dimension table, this sink (which mirrors the
     reference's per-channel output contract) would need to become a
-    distributed write instead."""
+    distributed write instead.  The O(channels) rows are sorted here, not
+    with ``orderBy``, which would run a range-sampling job and a shuffle."""
     out = []
-    for row in channels.orderBy("file", "index").collect():
+    rows = sorted(channels.collect(), key=lambda r: (r["file"], r["index"]))
+    for row in rows:
         d = {
             "name": row["name"],
             "start": int(row["start"]),

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import json
 import os
-import struct
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -57,17 +56,23 @@ def write_annotations_json(annotations: DataFrame, out_dir: str) -> None:
     Record-start TALs (empty text) are metadata, not annotations: they
     already surface as ``offset_sec`` on the annotations frame, so the
     sink writes only real texts (the parser excludes empties).  Sorted
-    within partitions for stable diffable output; annotation volume is
-    O(events-in-recording), not O(samples), so the single-file coalesce
-    matches the channel sink's contract."""
+    for stable diffable output; annotation volume is
+    O(events-in-recording), not O(samples), so one output file matches
+    the channel sink's contract."""
+    _annotation_json_rows(annotations).write.mode("overwrite").json(out_dir)
+
+
+def _annotation_json_rows(annotations: DataFrame) -> DataFrame:
+    """The parsed TAL rows ``write_annotations_json`` writes: one shuffle
+    to a single partition AFTER the parse, so the annotation decode and
+    the parse keep the scan's parallelism (a ``coalesce(1)`` would pull
+    them into the one writer task)."""
     from processor_edf_spark.sources.edf import parse_tal_annotations
 
-    (
+    return (
         parse_tal_annotations(annotations)
-        .coalesce(1)
+        .repartition(1)
         .sortWithinPartitions("file", "record", "tal_idx", "text")
-        .write.mode("overwrite")
-        .json(out_dir)
     )
 
 
@@ -152,28 +157,40 @@ def write_reference_compatible(
     """Write ``channel{-%05d}.ts.bin`` (raw float64, chronological) and
     ``channel{-%05d}.json`` exactly as the reference does.
 
-    Sample data streams through ``toLocalIterator`` per channel partition —
-    acceptable because this sink exists only for output-contract parity on
-    reference-scale inputs; at 100 TB use the parquet sink.
+    The samples are sorted by (channel, t) in Spark and collected ONCE as
+    Arrow columns; each channel's run is then one buffer write, with no
+    per-row Python.  Driver memory bound: the whole ``(channel, value)``
+    table is held at once — 8 bytes per value plus the Arrow string
+    column (4 offset bytes + the label's bytes per row), so this sink
+    exists only for output-contract parity on reference-scale inputs; at
+    100 TB use the parquet sink.  The ``.json`` files are written even
+    when there are no samples.
     """
     os.makedirs(out_dir, exist_ok=True)
     order = {d["name"]: i for i, d in enumerate(channel_dicts)}
 
-    arranged = (
+    table = (
         samples.repartition("channel")
         .sortWithinPartitions("channel", "t_usec")
         .select("channel", "value")
+        .toArrow()
     )
+    # one channel per hash partition, so each channel is one contiguous run
+    codes = table.column("channel").combine_chunks().dictionary_encode()
+    idx = codes.indices.to_numpy(zero_copy_only=False)
+    values = table.column("value").to_numpy().astype("<f8", copy=False)
+    starts = np.flatnonzero(np.diff(idx, prepend=-1))
+    ends = np.append(starts[1:], len(idx))
     handles: dict[str, object] = {}
     try:
-        for row in arranged.toLocalIterator():
-            ch = row["channel"].strip()
+        for s, e in zip(starts, ends):
+            ch = codes.dictionary[idx[s]].as_py().strip()
             if ch not in handles:
-                idx = order.get(ch, len(order))
+                i = order.get(ch, len(order))
                 handles[ch] = open(
-                    os.path.join(out_dir, f"channel{_suffix(idx)}.ts.bin"), "wb"
+                    os.path.join(out_dir, f"channel{_suffix(i)}.ts.bin"), "wb"
                 )
-            handles[ch].write(struct.pack("<d", row["value"]))
+            handles[ch].write(values[s:e].tobytes())
     finally:
         for f in handles.values():
             f.close()

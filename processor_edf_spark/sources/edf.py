@@ -20,6 +20,10 @@ Spark-first design (NOT a port):
   reference is hard-limited to one file per process (main.py:15-16).
 - The status probe and the signal-header scan read only the
   256+256·ns header bytes of each file.
+- Quarantine rides the scans: with ``quarantine=True`` each scan task
+  runs ``probe_header`` on the header it has just read and emits nothing
+  for a rejected file, so no plan re-runs the probe or joins against
+  ``file_status`` (which stays the report, over the same check).
 - The sample, chunk-run and annotation scans explode each file into
   slice ids from its ``length`` alone (a small file is one slice), spread
   the slice rows round-robin over the session's parallelism, and each
@@ -507,26 +511,50 @@ FILE_STATUS_SCHEMA = (
 )
 
 
+def probe_header(h: dict, length: int) -> int:
+    """The structural probe of one parsed header against its file's
+    LENGTH: header validation, the calibration of every decoded signal,
+    and the complete-record count (``record_count``), which it returns.
+    Raises ``ValueError`` with the reason.  Pure: ``status_probe`` and the
+    quarantining scans run it on the header they already read."""
+    if h["nb_signal"] <= 0:
+        raise ValueError("no signals")
+    if h["duration"] <= 0:
+        raise ValueError(f"non-positive record duration {h['duration']}")
+    if h["nb_data_rec"] < -1:
+        raise ValueError(f"negative record count {h['nb_data_rec']}")
+    edf_start_usec(h["start_date"], h["start_time"])  # validates dates
+    if int(sum(h["nr_samples"])) <= 0:
+        raise ValueError("empty data records")
+    for i in _data_signals(h):
+        _calibration(h, i)
+    return record_count(h, length)
+
+
+def _scan_header(path: str, length: int, quarantine: bool) -> dict | None:
+    """The header a scan task decodes with.  With ``quarantine`` on, a file
+    ``status_probe`` rejects yields ``None`` (the same read and the same
+    checks, so the quarantined set is ``file_status``'s ``ok = false``
+    set); with it off, a malformed file raises here as it always did."""
+    if not quarantine:
+        return _read_header(path)
+    try:
+        h = _read_header(path)
+        probe_header(h, length)
+        return h
+    except Exception:  # noqa: BLE001 — reported by file_status
+        return None
+
+
 def status_probe(path: str, n_bytes: int) -> tuple:
-    """One file's structural probe from its header bytes and its LENGTH
-    alone: header validation, the calibration of every decoded signal,
-    and the complete-record count (``record_count``).  Any failure —
-    an unreadable file included — is a status row, never an exception."""
+    """One file's status row from its header bytes and its LENGTH alone
+    (``probe_header``).  Any failure — an unreadable file included — is a
+    status row, never an exception."""
     name = path.rsplit("/", 1)[-1]
     try:
         h = _read_header(path)
-        if h["nb_signal"] <= 0:
-            raise ValueError("no signals")
-        if h["duration"] <= 0:
-            raise ValueError(f"non-positive record duration {h['duration']}")
-        if h["nb_data_rec"] < -1:
-            raise ValueError(f"negative record count {h['nb_data_rec']}")
-        edf_start_usec(h["start_date"], h["start_time"])  # validates dates
-        if int(sum(h["nr_samples"])) <= 0:
-            raise ValueError("empty data records")
-        for i in _data_signals(h):
-            _calibration(h, i)
-        return (path, name, True, None, h["nb_signal"], record_count(h, n_bytes), n_bytes)
+        n_rec = probe_header(h, n_bytes)
+        return (path, name, True, None, h["nb_signal"], n_rec, n_bytes)
     except Exception as e:  # noqa: BLE001 — any parse failure quarantines
         return (path, name, False, f"{type(e).__name__}: {e}", None, None, n_bytes)
 
@@ -538,9 +566,11 @@ def file_status(files: DataFrame) -> DataFrame:
     The reference swallows decode errors and publishes partial output
     (processor.py:66-69); the Spark design is the opposite — fail fast per
     FILE, never per job: corrupt files surface here as ``ok=false`` rows
-    (PERMISSIVE-style status column) and the pipeline quarantines them,
-    while every healthy file still processes.  At 100 TB a single bad file
-    must never kill the run.
+    (PERMISSIVE-style status column) and the scans quarantine them
+    (``quarantine=True``: each scan task runs the same ``probe_header`` on
+    the header it reads anyway), while every healthy file still processes.
+    At 100 TB a single bad file must never kill the run.  This is the
+    report; no pipeline plan joins against it.
     """
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -559,14 +589,17 @@ def file_status(files: DataFrame) -> DataFrame:
     )
 
 
-def parse_signal_headers(files: DataFrame) -> DataFrame:
+def parse_signal_headers(files: DataFrame, *, quarantine: bool = False) -> DataFrame:
     """File listing → signal-header dimension table (S2/S3), from the
-    header bytes of each file."""
+    header bytes of each file; ``quarantine`` drops the files the probe
+    rejects (``_scan_header``)."""
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for p, n in zip(pdf["path"], pdf["length"]):
-                yield signal_header_rows(str(p), _read_header(str(p)), int(n))
+                h = _scan_header(str(p), int(n), quarantine)
+                if h is not None:
+                    yield signal_header_rows(str(p), h, int(n))
 
     return files.select("path", "length").mapInPandas(
         gen, schema=SIGNAL_HEADERS_SCHEMA
@@ -577,12 +610,17 @@ def _map_slices(
     files: DataFrame,
     emit: Callable[[str, dict, np.ndarray, int], Iterable[pd.DataFrame]],
     schema,
+    *,
+    quarantine: bool = False,
 ) -> DataFrame:
     """The shape every record scan shares: explode each file into slice
     ids from its length (``SLICE_BYTES`` as set when the plan is built),
     spread the slice rows round-robin over the session's parallelism, and
     per slice read the header and the slice's record range, then emit
-    ``emit(file_name, header, records, rec0)`` frames.
+    ``emit(file_name, header, records, rec0)`` frames.  With
+    ``quarantine`` on, every slice of a file whose header fails the probe
+    emits nothing — the check runs on the header the task has already
+    read, so quarantine costs no I/O and no extra Python stage.
 
     The explicit round-robin width keeps AQE from coalescing the few KB of
     slice rows into one partition, which would serialize the decode they
@@ -600,7 +638,9 @@ def _map_slices(
         for pdf in batches:
             for p, n, k in zip(pdf["path"], pdf["length"], pdf["slice"]):
                 p = str(p)
-                h = _read_header(p)
+                h = _scan_header(p, int(n), quarantine)
+                if h is None:
+                    continue
                 rec0, n_rec, start, n_bytes = ranges_from_header(
                     h, int(n), slice_bytes
                 )[int(k)]
@@ -614,7 +654,10 @@ def _map_slices(
 
 
 def decode_samples(
-    files: DataFrame, wanted_signals: set[str] | None = None
+    files: DataFrame,
+    wanted_signals: set[str] | None = None,
+    *,
+    quarantine: bool = False,
 ) -> DataFrame:
     """File listing → long-format samples (S4 + W3/W4 + P1/P3/P4).
 
@@ -624,6 +667,7 @@ def decode_samples(
         files,
         lambda f, h, rec, rec0: _decode_block(h, rec, rec0, f, wanted_signals),
         SAMPLES_SCHEMA,
+        quarantine=quarantine,
     )
 
 
@@ -633,22 +677,24 @@ CHUNK_RUNS_SCHEMA = (
 )
 
 
-def decode_chunk_runs(files: DataFrame) -> DataFrame:
+def decode_chunk_runs(files: DataFrame, *, quarantine: bool = False) -> DataFrame:
     """File listing → per-(file, signal, slice) contiguous-run table (W1 at
     the source; O(chunks) rows, no sample movement)."""
     return _map_slices(
         files,
         lambda *block: [chunk_run_rows_from_matrix(*block)],
         CHUNK_RUNS_SCHEMA,
+        quarantine=quarantine,
     )
 
 
-def decode_annotations(files: DataFrame) -> DataFrame:
+def decode_annotations(files: DataFrame, *, quarantine: bool = False) -> DataFrame:
     """File listing → annotations table (S5)."""
     return _map_slices(
         files,
         lambda *block: [annotation_rows_from_matrix(*block)],
         ANNOTATIONS_SCHEMA,
+        quarantine=quarantine,
     )
 
 

@@ -388,6 +388,64 @@ def test_pipeline_ranged_quarantine_uses_header_probe(spark, monkeypatch, tmp_pa
     assert annotations.select("file").distinct().count() == 1
 
 
+def test_quarantined_multi_slice_file_yields_no_slice_rows(spark, monkeypatch, tmp_path):
+    """A file whose header parses but fails the probe (a zero calibration
+    gain) is split into several slices; with quarantine on, no slice of
+    it emits a row from any scan, and file_status names the reason.
+    With quarantine off the same plan still fails at the action."""
+    from pyspark.errors import PythonException
+
+    from processor_edf_spark.pipeline import process_edf_directory
+    from processor_edf_spark.sources.edf import (
+        decode_annotations,
+        decode_chunk_runs,
+        file_status,
+        parse_signal_headers,
+    )
+
+    d = tmp_path / "q3"
+    d.mkdir()
+    kw = dict(n_signals=2, rate=100, nb_rec=40, variant="EDF+D", gap_every=9, gap_sec=3.0)
+    write_edf_fast(str(d / "good.edf"), **kw)
+    bad = d / "flat.edf"
+    write_edf_fast(str(bad), **kw)
+    raw = bytearray(bad.read_bytes())
+    ns = 3  # two data signals + the annotation signal
+    phy_min, phy_max = 256 + 104 * ns + 8, 256 + 112 * ns + 8  # signal 1
+    raw[phy_min : phy_min + 8] = raw[phy_max : phy_max + 8]
+    bad.write_bytes(bytes(raw))
+
+    monkeypatch.setattr(edf_mod, "SLICE_BYTES", 2 * 1024)
+    h = parse_edf_header(bytes(raw))
+    assert sum(n for _, n, _, _ in ranges_from_header(h, len(raw), 2 * 1024) if n) > 3
+
+    files = scan_edf_files(spark, str(d))
+    (status,) = file_status(files).filter("NOT ok").collect()
+    assert status["file"] == "flat.edf" and "phy_max == phy_min" in status["error"]
+
+    scans = {
+        "samples": decode_samples(files, quarantine=True),
+        "annotations": decode_annotations(files, quarantine=True),
+        "chunk_runs": decode_chunk_runs(files, quarantine=True),
+        "headers": parse_signal_headers(files, quarantine=True),
+    }
+    for name, df in scans.items():
+        got = {r["file"] for r in df.select("file").distinct().collect()}
+        assert got == {"good.edf"}, name
+    good = read_edf(str(d / "good.edf"))["samples"]
+    _assert_same_samples(
+        scans["samples"].toPandas().astype({"file": str, "channel": str}), good
+    )
+
+    samples, channels, annotations = process_edf_directory(spark, str(d), quarantine=True)
+    assert samples.count() == len(good)
+    assert {r["file"] for r in channels.collect()} == {"good.edf"}
+    assert annotations.filter(F.col("file") == "flat.edf").count() == 0
+
+    with pytest.raises(PythonException, match="phy_max == phy_min"):
+        decode_samples(files).count()
+
+
 # ---------------------------------------------------------------------------
 # Property-based fuzz — for ANY header geometry, truncation point and
 # slice size, the decode equals the reference reader

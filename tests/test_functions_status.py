@@ -225,6 +225,36 @@ def test_zero_gain_calibration_is_quarantined(spark, tmp_path):
         samples.count()
 
 
+def test_second_call_sees_grown_directory(spark, tmp_path):
+    """Channel metadata is rebuilt on every call: a file added to the
+    directory between two calls in one session shows up in the second
+    call's channels (a plan-matched cache of the header scan would hand
+    back the first call's headers, since the listing compares equal by
+    its root path)."""
+    from processor_edf_spark.pipeline import channel_dicts
+
+    write_edf(
+        str(tmp_path / "a.edf"),
+        signals=[{"label": f"a{i}", "rate": 100, "gen": sine(1.0 + i)} for i in range(2)],
+        nb_data_rec=2,
+    )
+    for quarantine in (False, True):
+        _, channels, _ = process_edf_directory(spark, str(tmp_path), quarantine=quarantine)
+        assert [d["name"] for d in channel_dicts(channels)] == ["a0", "a1"]
+    write_edf(
+        str(tmp_path / "b.edf"),
+        signals=[{"label": f"b{i}", "rate": 50, "gen": sine(2.0 + i)} for i in range(4)],
+        nb_data_rec=3,
+    )
+    for quarantine in (False, True):
+        _, channels, _ = process_edf_directory(spark, str(tmp_path), quarantine=quarantine)
+        dicts = channel_dicts(channels)
+        assert [d["name"] for d in dicts] == ["a0", "a1", "b0", "b1", "b2", "b3"]
+        assert [d["rate"] for d in dicts] == [100.0] * 2 + [50.0] * 4
+        nums = {r["name"]: r["num_values"] for r in channels.collect()}
+        assert nums == {"a0": 200, "a1": 200, "b0": 150, "b1": 150, "b2": 150, "b3": 150}
+
+
 def test_ntz_epoch_us_matches_duckdb(spark):
     """The engine's canonical epoch-µs derivation is registry.TS_US:
     ``unix_micros(cast(ts AS timestamp))`` over a TIMESTAMP_NTZ column

@@ -95,6 +95,24 @@ def test_reference_compatible_sink(spark, tmp_path):
     meta = json.load(open(os.path.join(out, "channel.json")))
     assert meta["name"] == "chA" and meta["rate"] == 1.0
 
+    # two files whose chA samples interleave in time: one chronological
+    # run per channel across files, over several Spark partitions
+    rows = [("f1.edf", "chA", t * USEC, float(t)) for t in range(0, 400, 2)]
+    rows += [("f2.edf", "chA", t * USEC, float(t)) for t in range(1, 400, 2)]
+    rows += [("f2.edf", "chB", t * USEC, -float(t)) for t in range(50)]
+    samples = spark.createDataFrame(rows, SAMPLES_SCHEMA).repartition(3)
+    out = str(tmp_path / "two_files")
+    write_reference_compatible(samples, dicts, out)
+    a = np.fromfile(os.path.join(out, "channel.ts.bin"), "<f8")
+    b = np.fromfile(os.path.join(out, "channel-00001.ts.bin"), "<f8")
+    np.testing.assert_array_equal(a, np.arange(400, dtype=float))
+    np.testing.assert_array_equal(b, [-float(t) for t in range(50)])
+
+    # no samples: the metadata files are still written
+    out = str(tmp_path / "empty")
+    write_reference_compatible(spark.createDataFrame([], SAMPLES_SCHEMA), dicts, out)
+    assert sorted(os.listdir(out)) == ["channel-00001.json", "channel.json"]
+
 
 def test_parquet_sink_time_range_skipping(spark, tmp_path):
     """The canonical sample sink sorts by (channel, t_usec) within

@@ -8,6 +8,9 @@ tests rather than by re-reading .explain() output by hand.
 
 from __future__ import annotations
 
+import json
+import re
+
 import pytest
 
 from processor_edf_spark.plans import QUERIES
@@ -841,3 +844,76 @@ def test_mp3_row_is_scan_side_only(spark):
     plan = plan_of(spark, "mp3_decode_stats")
     assert "Join" not in plan
     assert "HashAggregate" not in plan
+
+
+# ---------------------------------------------------------------------------
+# EDF pipeline: quarantine rides the slice scans
+# ---------------------------------------------------------------------------
+
+_PYTHON_NODE = re.compile(
+    r"\b(MapInPandas|MapInArrow|PythonMapInArrow|ArrowEvalPython|BatchEvalPython"
+    r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|AggregateInPandas|WindowInPandas)\b"
+)
+
+
+@pytest.fixture(scope="module")
+def edf_quarantine_dir(tmp_path_factory):
+    from tests.edf_fixtures import sine, write_edf
+
+    d = tmp_path_factory.mktemp("edf_plans")
+    for i in range(2):
+        write_edf(
+            str(d / f"f{i}.edf"),
+            signals=[{"label": f"s{j}", "rate": 64, "gen": sine(1.0 + j)} for j in range(2)],
+            nb_data_rec=6,
+            variant="EDF+D",
+            record_offsets_sec=[0.0, 1.0, 4.0, 5.0, 6.0, 9.0],
+            annotations_per_record={1: [(1.5, 0.5, f"event{i}")], 4: [(6.25, None, "x")]},
+        )
+    (d / "bad.edf").write_bytes(b"not an edf file" * 40)
+    return str(d)
+
+
+def test_edf_quarantine_plans_have_no_probe(spark, edf_quarantine_dir):
+    """process_edf_directory(quarantine=True): every scan runs the header
+    probe on the header it reads anyway, so the samples and annotations
+    plans are one Python scan each and no plan joins the listing against
+    a status table on ``path``.  The channels plan (before execution)
+    shows the chunk-run scan twice — under the bounds and the chunk-list
+    branches, whose shared exchange AQE reuses at run time; the header
+    scan has already run, once, into the call's checkpoint."""
+    from processor_edf_spark.pipeline import process_edf_directory
+
+    samples, channels, annotations = process_edf_directory(
+        spark, edf_quarantine_dir, quarantine=True
+    )
+    plans = {
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in [("samples", samples), ("channels", channels),
+                         ("annotations", annotations)]
+    }
+    counts = {name: len(_PYTHON_NODE.findall(p)) for name, p in plans.items()}
+    assert counts == {"samples": 1, "channels": 2, "annotations": 1}, counts
+    for name, p in plans.items():
+        assert not re.search(r"BroadcastHashJoin \[path#\d+\]", p), (name, p[:3000])
+    assert samples.select("file").distinct().count() == 2
+
+
+def test_annotations_sink_keeps_decode_parallel(spark, edf_quarantine_dir, tmp_path):
+    """write_annotations_json: one shuffle to a single partition AFTER the
+    TAL parse — no ``Coalesce 1`` above the annotation MapInPandas, which
+    would run every file's annotation decode in the one writer task."""
+    from processor_edf_spark.pipeline import process_edf_directory
+    from processor_edf_spark.sinks.writers import _annotation_json_rows, write_annotations_json
+
+    _, _, annotations = process_edf_directory(spark, edf_quarantine_dir, quarantine=True)
+    plan = _annotation_json_rows(annotations)._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce" not in plan, plan
+    single = plan.index("Exchange SinglePartition")
+    assert plan.index("MapInPandas") > single, plan  # the decode sits below it
+
+    out = tmp_path / "annotations"
+    write_annotations_json(annotations, str(out))
+    (part,) = out.glob("part-*.json")  # still a single output file
+    texts = [json.loads(line)["text"] for line in part.read_text().splitlines()]
+    assert texts == ["event0", "x", "event1", "x"]
