@@ -85,12 +85,18 @@ def dedup_incoming_channels(
     (name,type) group rates are near-identical in practice; for full
     generality we take the group's first-seen row as canonical and keep
     outliers (rate outside the band vs canonical) as separate channels.
+    "First" is the lowest ``signal_idx``, ties going to the first
+    ``file`` by name, so the canonical row does not depend on the order
+    rows arrive in.
     """
     key = [norm_name(F.col("name")).alias("_name_key"), F.upper(F.trim(F.col("type"))).alias("_type_key")]
     df = incoming.select("*", *key)
-    w = Window.partitionBy("_name_key", "_type_key").orderBy(
-        F.col("signal_idx").asc() if "signal_idx" in incoming.columns else F.col("rate").asc()
+    order = (
+        ["signal_idx"] + (["file"] if "file" in incoming.columns else [])
+        if "signal_idx" in incoming.columns
+        else ["rate"]
     )
+    w = Window.partitionBy("_name_key", "_type_key").orderBy(*order)
     df = df.withColumn("_canonical_rate", F.first("rate").over(w))
     in_band = F.abs(F.lit(1.0) - F.col("_canonical_rate") / F.col("rate")) < rate_band
     df = df.withColumn("_dup_rank", F.row_number().over(w))
@@ -113,6 +119,11 @@ def get_or_create_channels(
     """
     deduped = dedup_incoming_channels(incoming, rate_band)
     if existing is not None:
+        if "file" in incoming.columns:
+            # The first-match window (partitioned by every incoming
+            # column) and the index window below (by file) both cluster
+            # on ``file``: hashing by it once lets them share one shuffle.
+            deduped = deduped.repartition("file")
         matched = match_existing_channels(deduped, existing, rate_band)
     else:
         matched = deduped.withColumn("existing_id", F.lit(None).cast("string")).withColumn(

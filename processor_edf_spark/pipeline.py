@@ -6,16 +6,21 @@ The Spark lifecycle (SURVEY.md §3.4):
       → record-aligned slice decode (mapInPandas) → long-format samples
       → [header probe + quarantine, annotation filter, calibration —
          inside the decoder]
-      → channel registry (band-join dedup, J1-J3)
-      → gap sessionization (W1) + bounds/count aggregation (A1/A2)
+      → one metadata slice scan: per-signal header rows (slice 0 of each
+        file) + per-slice chunk runs (W1 in the scan; record bytes read
+        only for EDF+D), checkpointed once per call
+      → channel registry (band-join dedup, J1-J3), checkpointed
+      → cross-file run merge + ONE per-channel aggregate: bounds, count,
+        chunk list (A1/A2), broadcast-joined to the registry
       → channels metadata + parquet/JSON sinks
 
 Replaces the reference's eager single-file pipeline
 (processor/edf_processor/processor.py:10-69 + base_processor/base.py:40-53):
 one declarative plan; every stage reads header bytes or record-aligned
 byte ranges of the listed files (sources/edf.py), and the only shuffles
-are the spread of slice ids and the per-channel aggregations — which
-operate on partial states, not raw samples.
+are the spread of slice ids, the registry's and the per-channel
+aggregation — which operate on header rows and run rows, not raw
+samples.
 
 Error handling: the reference swallows decode errors and publishes partial
 output (processor.py:66-69).  Here a malformed file fails its own task and
@@ -37,10 +42,10 @@ from processor_edf_spark.operators.channels import (
 from processor_edf_spark.operators.sessionize import merge_chunk_runs
 from processor_edf_spark.sources.edf import (
     decode_annotations,
-    decode_chunk_runs,
+    decode_channel_scan,
     decode_samples,
-    parse_signal_headers,
     scan_edf_files,
+    split_channel_scan,
 )
 
 
@@ -66,15 +71,25 @@ def process_edf_directory(
     ``file_status(scan_edf_files(spark, input_dir))`` to report the
     quarantined set (the same check, so the same files).
 
-    The channel plan's header-derived frames are checkpointed lazily for
-    this call only, and building them runs their shuffle stages (the
-    header scan and the registry match) before this function returns.
+    The channel metadata reads ONE slice scan (``decode_channel_scan``):
+    header rows from slice 0 of every file and chunk-run rows from every
+    slice, with record bytes read only for EDF+D files (contiguous runs
+    follow from the header and the record range).  It is checkpointed
+    lazily for this call only — a later call on a grown directory scans
+    again — and so is the channel registry built from it.  Building the
+    registry's checkpoint runs, before this function returns, the slice
+    spread, the metadata scan itself and the registry's shuffle stages;
+    the returned channels plan has no Python node.
     """
     files = scan_edf_files(spark, input_dir)
     samples = decode_samples(files, quarantine=quarantine)
     annotations = decode_annotations(files, quarantine=quarantine)
-    headers = parse_signal_headers(files, quarantine=quarantine)
-    chunk_runs = decode_chunk_runs(files, quarantine=quarantine)
+    # A lazy local checkpoint is reuse that lasts this call: ``.cache()``
+    # is matched by plan, and a file listing compares equal by its root
+    # path, so a later call on a grown directory would get this call's
+    # rows back.
+    scan = decode_channel_scan(files, quarantine=quarantine).localCheckpoint(eager=False)
+    headers, chunk_runs = split_channel_scan(scan)
     channels = build_channel_metadata(chunk_runs, headers, existing_channels)
     return samples, channels, annotations
 
@@ -87,29 +102,28 @@ def build_channel_metadata(
     """Channel metadata records mirroring timeseries-channel.schema.json.
 
     Plan shape — NO sample rows move anywhere: gap detection happened
-    inside the decode scan (``decode_chunk_runs``, one np.diff per
-    signal), so this plan only joins/aggregates O(chunks) run rows and
-    O(signals) header rows; the registry joins are broadcasts.  Bounds
-    (A1) and counts (A2) fall out of the merged chunk runs — every sample
-    belongs to exactly one run.
+    inside the decode scan (``chunk_run_rows_from_matrix``, one np.diff
+    per signal), so this plan only joins/aggregates O(chunks) run rows
+    and O(signals) header rows; the registry joins are broadcasts.  One
+    per-channel aggregate over the merged chunk runs gives the bounds
+    (A1), the count (A2) — every sample belongs to exactly one run — and
+    the chunk list.
+
+    ``headers`` needs the ``parse_signal_headers`` columns ``file``,
+    ``signal_idx``, ``label``, ``phy_dim``, ``rate`` and
+    ``is_annotation``; both inputs are read more than once, so pass
+    frames that are cheap to re-read (``process_edf_directory`` passes
+    its checkpointed scan).  Building the registry's checkpoint runs its
+    shuffle stages, and with them the input scans, before this function
+    returns.
     """
-    signal_dim = (
-        headers.filter(~F.col("is_annotation"))
-        .select(
-            "file",
-            "signal_idx",
-            F.trim(F.col("label")).alias("name"),
-            F.col("phy_dim").alias("unit"),
-            "rate",
-            F.lit("CONTINUOUS").alias("type"),
-        )
-        # O(signals) rows, but derived from the header reads via Python —
-        # checkpoint so the registry/mapping/output branches don't each
-        # re-read and re-parse every header.  A lazy local checkpoint is
-        # reuse that lasts this call: ``.cache()`` is matched by plan, and
-        # a file listing compares equal by its root path, so a later call
-        # on a grown directory would get this call's headers back.
-        .localCheckpoint(eager=False)
+    signal_dim = headers.filter(~F.col("is_annotation")).select(
+        "file",
+        "signal_idx",
+        F.trim(F.col("label")).alias("name"),
+        F.col("phy_dim").alias("unit"),
+        "rate",
+        F.lit("CONTINUOUS").alias("type"),
     )
     registry = get_or_create_channels(signal_dim, existing_channels).localCheckpoint(
         eager=False
@@ -137,24 +151,23 @@ def build_channel_metadata(
     )
 
     # Cross-file merge of the decoder's per-file runs (two-level plan:
-    # map side = np.diff in the scan, reduce side = O(chunks) window).
-    chunks = merge_chunk_runs(runs, id_col="m_id", rate_col="m_rate")
-
-    bounds = chunks.groupBy("m_id").agg(
-        F.min("start").alias("start"),
-        F.max("end").alias("end"),
-        F.sum("n_samples").alias("num_values"),
-    ).select(F.col("m_id").alias("b_id"), "start", "end", "num_values")
-
-    chunk_lists = chunks.groupBy("m_id").agg(
-        F.sort_array(F.collect_list(F.struct("index", "start", "end"))).alias(
-            "contiguousChunks"
+    # map side = np.diff in the scan, reduce side = O(chunks) window),
+    # then one aggregate per channel.
+    per_channel = (
+        merge_chunk_runs(runs, id_col="m_id", rate_col="m_rate")
+        .groupBy("m_id")
+        .agg(
+            F.min("start").alias("start"),
+            F.max("end").alias("end"),
+            F.sum("n_samples").alias("num_values"),
+            F.sort_array(F.collect_list(F.struct("index", "start", "end"))).alias(
+                "contiguousChunks"
+            ),
         )
-    ).select(F.col("m_id").alias("c_id"), "contiguousChunks")
+    )
 
     return (
-        registry.join(bounds, F.col("id") == F.col("b_id"))
-        .join(chunk_lists, F.col("id") == F.col("c_id"))
+        registry.join(F.broadcast(per_channel), F.col("id") == F.col("m_id"))
         .select(
             "id",
             "file",

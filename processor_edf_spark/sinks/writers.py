@@ -151,49 +151,63 @@ def _suffix(index: int) -> str:
     return f"-{index:05d}" if index > 0 else ""
 
 
+def _channel_key(name: str) -> str:
+    """The registry's J1 match key ``lower(trim(name))``
+    (``operators.channels.norm_name``; Spark's ``trim`` strips spaces)."""
+    return name.strip(" ").lower()
+
+
 def write_reference_compatible(
     samples: DataFrame, channel_dicts: list[dict], out_dir: str
 ) -> None:
     """Write ``channel{-%05d}.ts.bin`` (raw float64, chronological) and
     ``channel{-%05d}.json`` exactly as the reference does.
 
-    The samples are sorted by (channel, t) in Spark and collected ONCE as
-    Arrow columns; each channel's run is then one buffer write, with no
-    per-row Python.  Driver memory bound: the whole ``(channel, value)``
-    table is held at once — 8 bytes per value plus the Arrow string
-    column (4 offset bytes + the label's bytes per row), so this sink
-    exists only for output-contract parity on reference-scale inputs; at
-    100 TB use the parquet sink.  The ``.json`` files are written even
-    when there are no samples.
+    Samples go to the files of the dict whose name has the same J1 key
+    ``lower(trim(label))`` as their label — the key the registry merged
+    them by — so case variants of one channel share its one ``.ts.bin``.
+    A label whose key matches no dict, or more than one (same-name
+    channels whose rates lie outside the ±2% band: the samples carry no
+    rate to tell them apart), raises ``ValueError`` naming the labels
+    instead of writing files no ``.json`` describes.
+
+    The ``(channel, t_usec, value)`` columns are collected ONCE as Arrow
+    (no Spark shuffle), ordered by a stable ``np.lexsort`` on (channel,
+    t), and each channel's run is one buffer write, with no per-row
+    Python.  Driver memory bound: the whole table is held at once — 16
+    bytes per value (``t_usec`` and ``value``) plus the label column (4
+    offset bytes + the label's bytes per row) — and the ordering adds
+    8-byte temporaries per value, so this sink exists only for
+    output-contract parity on reference-scale inputs; at 100 TB use the
+    parquet sink.  The ``.json`` files are written even when there are
+    no samples.
     """
     os.makedirs(out_dir, exist_ok=True)
-    order = {d["name"]: i for i, d in enumerate(channel_dicts)}
+    by_key: dict[str, list[int]] = {}
+    for i, d in enumerate(channel_dicts):
+        by_key.setdefault(_channel_key(d["name"]), []).append(i)
 
-    table = (
-        samples.repartition("channel")
-        .sortWithinPartitions("channel", "t_usec")
-        .select("channel", "value")
-        .toArrow()
-    )
-    # one channel per hash partition, so each channel is one contiguous run
-    codes = table.column("channel").combine_chunks().dictionary_encode()
-    idx = codes.indices.to_numpy(zero_copy_only=False)
-    values = table.column("value").to_numpy().astype("<f8", copy=False)
-    starts = np.flatnonzero(np.diff(idx, prepend=-1))
-    ends = np.append(starts[1:], len(idx))
-    handles: dict[str, object] = {}
-    try:
-        for s, e in zip(starts, ends):
-            ch = codes.dictionary[idx[s]].as_py().strip()
-            if ch not in handles:
-                i = order.get(ch, len(order))
-                handles[ch] = open(
-                    os.path.join(out_dir, f"channel{_suffix(i)}.ts.bin"), "wb"
-                )
-            handles[ch].write(values[s:e].tobytes())
-    finally:
-        for f in handles.values():
-            f.close()
+    table = samples.select("channel", "t_usec", "value").toArrow()
+    labels = table.column("channel").combine_chunks().dictionary_encode()
+    dict_of_label = np.empty(len(labels.dictionary), dtype=np.int64)
+    for j, label in enumerate(labels.dictionary.to_pylist()):
+        hits = by_key.get(_channel_key(label), [])
+        if len(hits) != 1:
+            raise ValueError(
+                f"samples labelled {label!r} match {len(hits)} channel dicts "
+                f"{[channel_dicts[i]['name'] for i in hits]}, not exactly one"
+            )
+        dict_of_label[j] = hits[0]
+    chan = dict_of_label[labels.indices.to_numpy(zero_copy_only=False)]
+    order = np.lexsort((table.column("t_usec").to_numpy(), chan))
+    chan = chan[order]
+    values = table.column("value").to_numpy()[order].astype("<f8", copy=False)
+    starts = np.flatnonzero(np.diff(chan, prepend=-1))
+    ends = np.append(starts[1:], len(chan))
+    for s, e in zip(starts, ends):
+        path = os.path.join(out_dir, f"channel{_suffix(int(chan[s]))}.ts.bin")
+        with open(path, "wb") as f:
+            f.write(values[s:e].tobytes())
 
     for i, d in enumerate(channel_dicts):
         with open(os.path.join(out_dir, f"channel{_suffix(i)}.json"), "w") as f:

@@ -24,13 +24,19 @@ Spark-first design (NOT a port):
   runs ``probe_header`` on the header it has just read and emits nothing
   for a rejected file, so no plan re-runs the probe or joins against
   ``file_status`` (which stays the report, over the same check).
-- The sample, chunk-run and annotation scans explode each file into
-  slice ids from its ``length`` alone (a small file is one slice), spread
-  the slice rows round-robin over the session's parallelism, and each
-  task reads the header plus one record-aligned byte range per slice
-  (``ranges_from_header``).  Timestamps do not depend on the split: the
-  contiguous formula uses the global sample index ``rec0·n_i + j``, and
-  EDF+D records each carry their own absolute TAL offset.
+- The sample, chunk-run, annotation and channel-metadata scans explode
+  each file into slice ids from its ``length`` alone (a small file is
+  one slice), spread the slice rows round-robin over the session's
+  parallelism, and each task reads the header plus one record-aligned
+  byte range per slice (``ranges_from_header``).  Timestamps do not
+  depend on the split: the contiguous formula uses the global sample
+  index ``rec0·n_i + j``, and EDF+D records each carry their own
+  absolute TAL offset.
+- The channel metadata needs one scan, ``decode_channel_scan``: slice 0
+  of every file emits its per-signal header rows and every slice its
+  chunk runs.  Chunk runs read record bytes only for EDF+D files (the
+  TAL offsets); for EDF and EDF+C they follow from the header and the
+  slice's record range, so the scan reads header bytes alone.
 - The decode itself is a ``mapInPandas`` UDTF.  Inside, decoding is one
   ``np.frombuffer('<i2')`` + a reshape per slice (fully vectorized)
   instead of the reference's per-sample Python loop with O(n²)
@@ -612,15 +618,24 @@ def _map_slices(
     schema,
     *,
     quarantine: bool = False,
+    first_slice: Callable[[str, dict, int], Iterable[pd.DataFrame]] | None = None,
+    read_records: Callable[[dict], bool] = lambda h: True,
 ) -> DataFrame:
     """The shape every record scan shares: explode each file into slice
     ids from its length (``SLICE_BYTES`` as set when the plan is built),
     spread the slice rows round-robin over the session's parallelism, and
     per slice read the header and the slice's record range, then emit
-    ``emit(file_name, header, records, rec0)`` frames.  With
-    ``quarantine`` on, every slice of a file whose header fails the probe
-    emits nothing — the check runs on the header the task has already
-    read, so quarantine costs no I/O and no extra Python stage.
+    ``emit(file_name, header, records, rec0)`` frames for every slice
+    that owns records.  With ``quarantine`` on, every slice of a file
+    whose header fails the probe emits nothing — the check runs on the
+    header the task has already read, so quarantine costs no I/O and no
+    extra Python stage.
+
+    ``first_slice(path, header, length)`` frames are emitted once per
+    file, from slice 0, whether or not it owns records.  When
+    ``read_records(header)`` is false the slice's bytes are not read and
+    ``emit`` gets an ``(n_rec, 0)`` matrix: for emitters that need only
+    the record range.
 
     The explicit round-robin width keeps AQE from coalescing the few KB of
     slice rows into one partition, which would serialize the decode they
@@ -637,17 +652,20 @@ def _map_slices(
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for p, n, k in zip(pdf["path"], pdf["length"], pdf["slice"]):
-                p = str(p)
-                h = _scan_header(p, int(n), quarantine)
+                p, n, k = str(p), int(n), int(k)
+                h = _scan_header(p, n, quarantine)
                 if h is None:
                     continue
-                rec0, n_rec, start, n_bytes = ranges_from_header(
-                    h, int(n), slice_bytes
-                )[int(k)]
+                if k == 0 and first_slice is not None:
+                    yield from first_slice(p, h, n)
+                rec0, n_rec, start, n_bytes = ranges_from_header(h, n, slice_bytes)[k]
                 if n_rec == 0:
                     continue
-                raw = _read_at(p, start, n_bytes)
-                rec = np.frombuffer(raw, dtype="<i2").reshape(n_rec, -1)
+                if read_records(h):
+                    raw = _read_at(p, start, n_bytes)
+                    rec = np.frombuffer(raw, dtype="<i2").reshape(n_rec, -1)
+                else:
+                    rec = np.empty((n_rec, 0), dtype="<i2")
                 yield from emit(p.rsplit("/", 1)[-1], h, rec, rec0)
 
     return slices.repartition(width).mapInPandas(gen, schema=schema)
@@ -677,6 +695,13 @@ CHUNK_RUNS_SCHEMA = (
 )
 
 
+def _needs_records(h: dict) -> bool:
+    """Chunk runs read record bytes only for EDF+D files, whose timestamps
+    come from each record's TAL; contiguous timestamps follow from the
+    header and the record range alone (``_signal_timestamps``)."""
+    return h["is_discontiguous"]
+
+
 def decode_chunk_runs(files: DataFrame, *, quarantine: bool = False) -> DataFrame:
     """File listing → per-(file, signal, slice) contiguous-run table (W1 at
     the source; O(chunks) rows, no sample movement)."""
@@ -685,6 +710,62 @@ def decode_chunk_runs(files: DataFrame, *, quarantine: bool = False) -> DataFram
         lambda *block: [chunk_run_rows_from_matrix(*block)],
         CHUNK_RUNS_SCHEMA,
         quarantine=quarantine,
+        read_records=_needs_records,
+    )
+
+
+# The header fields the channel metadata reads (a subset of
+# SIGNAL_HEADERS_SCHEMA) and the chunk-run columns, as one frame: a header
+# row has ``label`` set and ``channel`` null, a run row the reverse.
+_HEADER_FIELDS = ["file", "signal_idx", "label", "phy_dim", "rate", "is_annotation"]
+_CHUNK_RUN_FIELDS = ["file", "channel", "index", "start", "end", "n_samples", "rate"]
+CHANNEL_SCAN_SCHEMA = (
+    "file string, signal_idx int, label string, phy_dim string, "
+    "is_annotation boolean, channel string, index long, start long, end long, "
+    "n_samples long, rate double"
+)
+_CHANNEL_SCAN_COLUMNS = [f.split()[0] for f in CHANNEL_SCAN_SCHEMA.split(", ")]
+
+
+def _channel_scan_rows(frame: pd.DataFrame) -> pd.DataFrame:
+    """``frame`` as CHANNEL_SCAN_SCHEMA rows: the columns it lacks are
+    null."""
+    return pd.DataFrame(
+        {
+            c: frame[c] if c in frame.columns else pd.Series([None] * len(frame), dtype=object)
+            for c in _CHANNEL_SCAN_COLUMNS
+        }
+    )
+
+
+def decode_channel_scan(files: DataFrame, *, quarantine: bool = False) -> DataFrame:
+    """File listing → everything the channel metadata reads, from ONE
+    slice scan: header rows (one per signal, emitted by slice 0 of every
+    file, records or not) and run rows (the ``decode_chunk_runs`` rows of
+    every slice).  Record bytes are read only for EDF+D files.
+    ``split_channel_scan`` separates the two kinds."""
+    return _map_slices(
+        files,
+        lambda *block: [_channel_scan_rows(chunk_run_rows_from_matrix(*block))],
+        CHANNEL_SCAN_SCHEMA,
+        quarantine=quarantine,
+        first_slice=lambda p, h, n: [
+            _channel_scan_rows(signal_header_rows(p, h, n)[_HEADER_FIELDS])
+        ],
+        read_records=_needs_records,
+    )
+
+
+def split_channel_scan(scan: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``decode_channel_scan`` rows → ``(headers, chunk_runs)``: the
+    header columns ``build_channel_metadata`` reads from
+    ``parse_signal_headers`` and the ``decode_chunk_runs`` table.  The
+    kinds are told apart by a null test, which the optimizer does not
+    count as a selective filter, so no runtime bloom-filter job is
+    planned for the joins that read them."""
+    return (
+        scan.filter(F.col("label").isNotNull()).select(*_HEADER_FIELDS),
+        scan.filter(F.col("channel").isNotNull()).select(*_CHUNK_RUN_FIELDS),
     )
 
 

@@ -6,6 +6,7 @@ all samples — on randomized gap patterns, not just fixtures."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 pytestmark = pytest.mark.slow
@@ -93,3 +94,56 @@ def test_decoder_runs_equal_sample_window(spark, tmp_path):
     ]
     assert meta_chunks == naive_chunks
     assert len(meta_chunks) == 3  # gaps at 1→5 s and 6→30 s
+
+
+def test_append_mode_channels_equal_reference_gap_runs(spark, tmp_path):
+    """Append mode over a registry whose names differ from the incoming
+    labels only in case and spaces: each channel's bounds, count and
+    chunk list equal the gap runs recomputed from the reference reader's
+    timestamps over every file of that channel, and its id follows the
+    registry match (lowest id within ±2%, else a new ``file#index``)."""
+    from tests.edf_reference import read_edf
+
+    specs = {
+        "a.edf": ("12.57.02", [("EEG C3", 100), ("EMG", 50)], [0.0, 1.0, 2.0, 5.0, 6.0, 9.0]),
+        "b.edf": ("12.58.02", [("eeg c3", 100)], [0.0, 1.0, 4.0, 5.0]),
+        "c.edf": ("12.59.02", [("EMG", 50)], [0.0, 1.0, 2.0]),
+    }
+    for name, (start, signals, offsets) in specs.items():
+        write_edf(
+            str(tmp_path / name),
+            signals=[{"label": lbl, "rate": r, "gen": sine(2.0)} for lbl, r in signals],
+            nb_data_rec=len(offsets),
+            start_time=start,
+            variant="EDF+D",
+            record_offsets_sec=offsets,
+        )
+    registry = spark.createDataFrame(
+        [("reg-7", "EEG c3", 100.0, "CONTINUOUS"),
+         ("reg-2", " eeg C3", 101.0, "CONTINUOUS"),
+         ("reg-9", "emg", 60.0, "CONTINUOUS")],
+        "id string, name string, rate double, type string",
+    )
+    _, channels, _ = process_edf_directory(
+        spark, str(tmp_path), existing_channels=registry, quarantine=True
+    )
+    got = {r["name"].lower(): r for r in channels.collect()}
+
+    ref = [read_edf(str(tmp_path / name))["samples"] for name in sorted(specs)]
+    samples = pd.concat(ref, ignore_index=True)
+    samples["key"] = samples["channel"].str.strip().str.lower()
+    assert sorted(got) == ["eeg c3", "emg"]
+    for key, rate in (("eeg c3", 100.0), ("emg", 50.0)):
+        t = np.sort(samples.loc[samples["key"] == key, "t_usec"].to_numpy())
+        starts = np.concatenate([[0], np.flatnonzero(np.diff(t) > 2 * USEC / rate) + 1])
+        ends = np.append(starts[1:], len(t))
+        row = got[key]
+        assert (row["start"], row["end"], row["num_values"]) == (t[0], t[-1], len(t))
+        assert [(c["index"], c["start"], c["end"]) for c in row["contiguousChunks"]] == [
+            (int(s), int(t[s]), int(t[e - 1])) for s, e in zip(starts, ends)
+        ]
+    # 100 Hz is within 2% of both registry rates: the lowest id wins; 50 Hz
+    # is outside 60 Hz's band, so EMG is new, named by its first row
+    # (lowest signal index, then first file by name)
+    assert got["eeg c3"]["id"] == "reg-2"
+    assert (got["emg"]["id"], got["emg"]["name"]) == ("c.edf#0", "EMG")

@@ -539,3 +539,75 @@ def test_zero_record_files_keep_headers_and_channels(spark, monkeypatch, tmp_pat
         _assert_matches_reference(s, str(d))
         channels.append(sorted(map(tuple, c.drop("id").collect())))
     assert channels[0] == channels[1]
+
+
+def test_channel_scan_equals_header_and_chunk_run_scans(spark, monkeypatch, tmp_path):
+    """The one metadata scan of process_edf_directory, with quarantine
+    on: its header rows equal parse_signal_headers' (each file's once,
+    records or not) and its run rows equal decode_chunk_runs', on a
+    multi-slice EDF+D file, an EDF+C file, a multi-slice file that
+    declares zero records, a file truncated below one record and a
+    quarantined file."""
+    from processor_edf_spark.sources.edf import (
+        _HEADER_FIELDS,
+        decode_channel_scan,
+        decode_chunk_runs,
+        parse_signal_headers,
+        split_channel_scan,
+    )
+
+    d = tmp_path / "scan"
+    d.mkdir()
+    write_edf_fast(str(d / "d.edf"), n_signals=2, rate=64, nb_rec=40,
+                   variant="EDF+D", gap_every=9, gap_sec=3.0)
+    write_edf_fast(str(d / "c.edf"), n_signals=3, rate=32, nb_rec=25)
+    write_edf_fast(str(d / "zero.edf"), n_signals=2, rate=16, nb_rec=30)
+    raw = bytearray((d / "zero.edf").read_bytes())
+    raw[236:244] = b"0".ljust(8)
+    (d / "zero.edf").write_bytes(bytes(raw))
+    write_edf_fast(str(d / "trunc.edf"), n_signals=3, rate=32, nb_rec=5)
+    raw = (d / "trunc.edf").read_bytes()
+    (d / "trunc.edf").write_bytes(raw[: 256 + 256 * 3 + 100])  # record is 192 B
+    write_edf_fast(str(d / "flat.edf"), n_signals=1, rate=16, nb_rec=4)
+    raw = bytearray((d / "flat.edf").read_bytes())
+    raw[256 + 104 : 256 + 112] = raw[256 + 112 : 256 + 120]  # phy_min = phy_max
+    (d / "flat.edf").write_bytes(bytes(raw))
+
+    slice_bytes = 2 * 1024
+    monkeypatch.setattr(edf_mod, "SLICE_BYTES", slice_bytes)
+    for name in ("d.edf", "zero.edf"):
+        h, length = _header(str(d / name))
+        assert len(ranges_from_header(h, length, slice_bytes)) > 1, name
+
+    files = scan_edf_files(spark, str(d))
+    headers, runs = split_channel_scan(decode_channel_scan(files, quarantine=True))
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    want_headers = rows(parse_signal_headers(files, quarantine=True).select(*_HEADER_FIELDS))
+    assert rows(headers) == want_headers
+    assert {r[0] for r in want_headers} == {"d.edf", "c.edf", "zero.edf", "trunc.edf"}
+    want_runs = rows(decode_chunk_runs(files, quarantine=True))
+    assert rows(runs) == want_runs
+    assert {r[0] for r in want_runs} == {"d.edf", "c.edf"}
+
+
+def test_contiguous_chunk_runs_need_no_record_bytes(edfc_dir):
+    """For EDF / EDF+C files the chunk runs follow from the header and the
+    record range alone: an ``(n_rec, 0)`` matrix gives the same rows as
+    the records themselves, for any block of records."""
+    from processor_edf_spark.sources.edf import chunk_run_rows_from_matrix
+
+    for name in ("a.edf", "b.edf"):
+        path = os.path.join(edfc_dir, name)
+        h, length = _header(path)
+        assert not h["is_discontiguous"]
+        with open(path, "rb") as f:
+            raw = f.read()
+        rec = np.frombuffer(raw[h["header_bytes"]:], "<i2").reshape(h["nb_data_rec"], -1)
+        for rec0, n in ((0, h["nb_data_rec"]), (0, 1), (17, 40), (h["nb_data_rec"] - 3, 3)):
+            full = chunk_run_rows_from_matrix(name, h, rec[rec0 : rec0 + n], rec0)
+            bare = chunk_run_rows_from_matrix(name, h, np.empty((n, 0), "<i2"), rec0)
+            assert len(full) == len(h["labels"])  # one run per signal
+            pd.testing.assert_frame_equal(full, bare)

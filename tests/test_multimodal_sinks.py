@@ -114,6 +114,66 @@ def test_reference_compatible_sink(spark, tmp_path):
     assert sorted(os.listdir(out)) == ["channel-00001.json", "channel.json"]
 
 
+def _two_file_channel_dicts(spark, d, signals):
+    """process_edf_directory → channel_dicts over one single-signal file
+    per (file name, label, rate, records, start time)."""
+    from processor_edf_spark.pipeline import channel_dicts, process_edf_directory
+    from tests.edf_fixtures import sine, write_edf
+
+    d.mkdir()
+    for name, label, rate, n_rec, start in signals:
+        write_edf(
+            str(d / name),
+            signals=[{"label": label, "rate": rate, "gen": sine(2.0)}],
+            nb_data_rec=n_rec,
+            start_time=start,
+        )
+    samples, channels, _ = process_edf_directory(spark, str(d))
+    return samples, channel_dicts(channels)
+
+
+def test_reference_sink_routes_case_variants_to_one_channel(spark, tmp_path):
+    """Labels ``EEG Fp1`` and ``eeg fp1`` at one rate are one channel
+    (the registry's lower(trim(name)) key): all 500 samples go to its
+    ``channel.ts.bin`` in time order, and no orphan ``.ts.bin`` without a
+    ``.json`` is written."""
+    from tests.edf_reference import read_edf
+
+    d = tmp_path / "variants"
+    samples, dicts = _two_file_channel_dicts(spark, d, [
+        ("a.edf", "EEG Fp1", 100, 3, "12.57.02"),
+        ("b.edf", "eeg fp1", 100, 2, "12.58.02"),
+    ])
+    assert len(dicts) == 1 and dicts[0]["name"] == "EEG Fp1"
+    out = tmp_path / "out"
+    write_reference_compatible(samples, dicts, str(out))
+    assert sorted(os.listdir(out)) == ["channel.json", "channel.ts.bin"]
+    got = np.fromfile(out / "channel.ts.bin", "<f8")
+    want = np.concatenate([read_edf(str(d / f))["samples"]["value"] for f in ("a.edf", "b.edf")])
+    assert len(got) == 500
+    np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-9)
+
+
+def test_reference_sink_rejects_ambiguous_or_unknown_labels(spark, tmp_path):
+    """Two channels named ``EEG`` whose rates lie outside the ±2% band
+    cannot be told apart by their samples' label, and a label no dict
+    names has no files to go to: both raise instead of writing."""
+    samples, dicts = _two_file_channel_dicts(spark, tmp_path / "bands", [
+        ("a.edf", "EEG", 100, 2, "12.57.02"),
+        ("b.edf", "EEG", 200, 2, "12.58.02"),
+    ])
+    assert [d["name"] for d in dicts] == ["EEG", "EEG"]
+    with pytest.raises(ValueError, match="'EEG' match 2 channel dicts"):
+        write_reference_compatible(samples, dicts, str(tmp_path / "out"))
+
+    rows = [("f.edf", "chA", 0, 1.0), ("f.edf", "chC", 0, 2.0)]
+    dicts = [{"name": "chA", "start": 0, "end": 0, "unit": "uV", "rate": 1.0, "type": "CONTINUOUS"}]
+    with pytest.raises(ValueError, match="'chC' match 0 channel dicts"):
+        write_reference_compatible(
+            spark.createDataFrame(rows, SAMPLES_SCHEMA), dicts, str(tmp_path / "out2")
+        )
+
+
 def test_parquet_sink_time_range_skipping(spark, tmp_path):
     """The canonical sample sink sorts by (channel, t_usec) within
     file-partitions, so parquet row-group min/max stats on t_usec give the

@@ -878,10 +878,9 @@ def test_edf_quarantine_plans_have_no_probe(spark, edf_quarantine_dir):
     """process_edf_directory(quarantine=True): every scan runs the header
     probe on the header it reads anyway, so the samples and annotations
     plans are one Python scan each and no plan joins the listing against
-    a status table on ``path``.  The channels plan (before execution)
-    shows the chunk-run scan twice — under the bounds and the chunk-list
-    branches, whose shared exchange AQE reuses at run time; the header
-    scan has already run, once, into the call's checkpoint."""
+    a status table on ``path``.  The channels plan has no Python node:
+    its one metadata scan (header and chunk-run rows) lives in the
+    call's checkpoint, which it reads."""
     from processor_edf_spark.pipeline import process_edf_directory
 
     samples, channels, annotations = process_edf_directory(
@@ -893,10 +892,62 @@ def test_edf_quarantine_plans_have_no_probe(spark, edf_quarantine_dir):
                          ("annotations", annotations)]
     }
     counts = {name: len(_PYTHON_NODE.findall(p)) for name, p in plans.items()}
-    assert counts == {"samples": 1, "channels": 2, "annotations": 1}, counts
+    assert counts == {"samples": 1, "channels": 0, "annotations": 1}, counts
     for name, p in plans.items():
         assert not re.search(r"BroadcastHashJoin \[path#\d+\]", p), (name, p[:3000])
     assert samples.select("file").distinct().count() == 2
+
+
+def test_edf_channels_plan_has_one_per_channel_aggregate(spark, edf_quarantine_dir):
+    """Bounds, count and chunk list come from ONE aggregate by channel id
+    over one run of the merge windows, joined to the registry once as a
+    broadcast — not a bounds branch and a chunk-list branch that each
+    re-run the merge windows and join back."""
+    from processor_edf_spark.pipeline import process_edf_directory
+
+    _, channels, _ = process_edf_directory(spark, edf_quarantine_dir, quarantine=True)
+    plan = channels._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bcollect_list\(", plan)) == 1, plan
+    assert len(re.findall(r"\bpartial_collect_list\(", plan)) == 1, plan
+    assert len(re.findall(r"Window \[lag\(end", plan)) == 1, plan  # the merge window
+    assert "SortMergeJoin" not in plan, plan
+    assert len(re.findall(r"BroadcastHashJoin \[id#\d+\], \[m_id#\d+\]", plan)) == 1, plan
+
+
+def test_edf_append_metadata_job_count(spark, tmp_path):
+    """process_edf_directory + channel_dicts in append mode on a 3-file
+    EDF+D directory start at most 10 Spark jobs, on every call of a
+    session.  The plan with a separate header scan and a bounds and a
+    chunk-list branch, each shuffle-joined to the registry, started 13
+    here; one checkpointed metadata scan, one per-channel aggregate and
+    one file shuffle for the registry's two file-clustered windows take
+    3 off."""
+    from processor_edf_spark.pipeline import channel_dicts, process_edf_directory
+    from tests.edf_fixtures import write_edf_fast
+
+    for i in range(3):
+        write_edf_fast(str(tmp_path / f"f{i}.edf"), n_signals=2, rate=64, nb_rec=20,
+                       variant="EDF+D", gap_every=7, gap_sec=3.0)
+    registry = spark.createDataFrame(
+        [("ch-1", "CH00", 64.0, "CONTINUOUS")], "id string, name string, rate double, type string"
+    )
+    sc = spark.sparkContext
+    try:
+        for call in range(2):
+            group = f"edf-append-jobs-{call}"
+            sc.setJobGroup(group, group)
+            _, channels, _ = process_edf_directory(
+                spark, str(tmp_path), existing_channels=registry, quarantine=True
+            )
+            dicts = channel_dicts(channels)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert jobs <= 10, jobs
+            assert sorted((d["name"], d["id"]) for d in dicts) == [
+                ("ch00", "ch-1"), ("ch01", "f0.edf#1")
+            ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_annotations_sink_keeps_decode_parallel(spark, edf_quarantine_dir, tmp_path):
