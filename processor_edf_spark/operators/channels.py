@@ -32,9 +32,7 @@ def norm_name(col):
     return F.lower(F.trim(col))
 
 
-def match_existing_channels(
-    incoming: DataFrame, existing: DataFrame, rate_band: float = RATE_BAND
-) -> DataFrame:
+def match_existing_channels(incoming: DataFrame, existing: DataFrame) -> DataFrame:
     """J1: left-join incoming signals to the platform channel registry.
 
     ``incoming``: name, rate, type (+ anything else).
@@ -56,7 +54,7 @@ def match_existing_channels(
     cond = (
         (norm_name(F.col("i.name")) == F.col("e.e_name"))
         & (F.upper(F.trim(F.col("i.type"))) == F.col("e.e_type"))
-        & (F.abs(F.lit(1.0) - F.col("i.rate") / F.col("e.existing_rate")) < rate_band)
+        & (F.abs(F.lit(1.0) - F.col("i.rate") / F.col("e.existing_rate")) < RATE_BAND)
     )
     # Registry is a dimension table — force broadcast so the samples-side
     # never shuffles for this lookup.
@@ -73,9 +71,7 @@ def match_existing_channels(
     )
 
 
-def dedup_incoming_channels(
-    incoming: DataFrame, rate_band: float = RATE_BAND
-) -> DataFrame:
+def dedup_incoming_channels(incoming: DataFrame) -> DataFrame:
     """J2 (intended semantics): consolidate near-duplicate signals within a
     batch — same (lower(trim(name)), type) and rates within the ±2% band
     collapse to one channel row (the first occurrence's rate/unit win).
@@ -91,14 +87,9 @@ def dedup_incoming_channels(
     """
     key = [norm_name(F.col("name")).alias("_name_key"), F.upper(F.trim(F.col("type"))).alias("_type_key")]
     df = incoming.select("*", *key)
-    order = (
-        ["signal_idx"] + (["file"] if "file" in incoming.columns else [])
-        if "signal_idx" in incoming.columns
-        else ["rate"]
-    )
-    w = Window.partitionBy("_name_key", "_type_key").orderBy(*order)
+    w = Window.partitionBy("_name_key", "_type_key").orderBy("signal_idx", "file")
     df = df.withColumn("_canonical_rate", F.first("rate").over(w))
-    in_band = F.abs(F.lit(1.0) - F.col("_canonical_rate") / F.col("rate")) < rate_band
+    in_band = F.abs(F.lit(1.0) - F.col("_canonical_rate") / F.col("rate")) < RATE_BAND
     df = df.withColumn("_dup_rank", F.row_number().over(w))
     return (
         df.filter((F.col("_dup_rank") == 1) | ~in_band)
@@ -107,31 +98,28 @@ def dedup_incoming_channels(
 
 
 def get_or_create_channels(
-    incoming: DataFrame,
-    existing: DataFrame | None = None,
-    rate_band: float = RATE_BAND,
+    incoming: DataFrame, existing: DataFrame | None = None
 ) -> DataFrame:
     """J3: the full get-or-create — platform match (append mode), intra-batch
     dedup, then id assignment for novel channels.
 
+    ``incoming``: one row per signal — ``file, signal_idx, name, unit,
+    rate, type`` (``build_channel_metadata``'s per-signal rows).
     Output: one row per distinct channel with ``id`` (existing platform id
     or a deterministic new id ``file#index``) and ``is_new`` flag.
     """
-    deduped = dedup_incoming_channels(incoming, rate_band)
+    deduped = dedup_incoming_channels(incoming)
     if existing is not None:
-        if "file" in incoming.columns:
-            # The first-match window (partitioned by every incoming
-            # column) and the index window below (by file) both cluster
-            # on ``file``: hashing by it once lets them share one shuffle.
-            deduped = deduped.repartition("file")
-        matched = match_existing_channels(deduped, existing, rate_band)
+        # The first-match window (partitioned by every incoming column)
+        # and the index window below (by file) both cluster on ``file``:
+        # hashing by it once lets them share one shuffle.
+        matched = match_existing_channels(deduped.repartition("file"), existing)
     else:
         matched = deduped.withColumn("existing_id", F.lit(None).cast("string")).withColumn(
             "existing_rate", F.lit(None).cast("double")
         )
 
-    order_col = "signal_idx" if "signal_idx" in incoming.columns else "name"
-    w = Window.partitionBy("file").orderBy(order_col) if "file" in incoming.columns else Window.orderBy(order_col)
+    w = Window.partitionBy("file").orderBy("signal_idx")
     return (
         matched.withColumn("index", F.row_number().over(w) - 1)
         .withColumn("is_new", F.col("existing_id").isNull())
@@ -139,11 +127,7 @@ def get_or_create_channels(
             "id",
             F.coalesce(
                 F.col("existing_id"),
-                F.concat_ws(
-                    "#",
-                    *( [F.col("file")] if "file" in incoming.columns else [] ),
-                    F.col("index").cast("string"),
-                ),
+                F.concat_ws("#", F.col("file"), F.col("index").cast("string")),
             ),
         )
     )

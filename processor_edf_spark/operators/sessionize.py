@@ -109,7 +109,7 @@ def hierarchical_chunks(
 
     Assumes units of one channel occupy non-interleaved time ranges (the
     reference's non-overlap invariant, base.py:87-95; overlaps are a
-    quarantine case — see validate_nonoverlapping).
+    quarantine case — the ``overlap_validation`` query checks it).
 
     Output: id_col, chunk_id, index, start, end, n_samples.
     """
@@ -165,41 +165,4 @@ def merge_chunk_runs(
         "start",
         "end",
         "n_samples",
-    )
-
-
-def validate_nonoverlapping(
-    chunks: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """Non-overlap invariant (W2, reference timeseries/base.py:87-95 +
-    README.md:30-32): within a key, each chunk must start strictly after the
-    previous chunk's end.
-
-    The reference enforces this with a single-threaded sorted insert +
-    assert; distributed, it becomes a post-aggregation validation.  Returns
-    the chunks with a boolean ``overlaps_previous`` column so callers choose
-    quarantine vs fail (SURVEY.md §7.3).
-    """
-    w = Window.partitionBy(*keys).orderBy("start")
-    prev_end = F.lag("end").over(w)
-    return chunks.withColumn(
-        "overlaps_previous",
-        F.when(prev_end.isNull(), F.lit(False)).otherwise(F.col("start") <= prev_end),
-    )
-
-
-def session_bounds(
-    df: DataFrame,
-    keys: Sequence[str],
-    time_col: str = "t_usec",
-    gap_usec: float = 0.0,
-) -> DataFrame:
-    """Generic sessionization of an event stream: per (key, session) min/max
-    time and event count.  Same plan shape as contiguous_chunks without the
-    sample-array index."""
-    chunked = with_chunk_id(df, keys, time_col, gap_usec=gap_usec)
-    return chunked.groupBy(*keys, "chunk_id").agg(
-        F.min(time_col).alias("session_start"),
-        F.max(time_col).alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
     )

@@ -6,10 +6,11 @@ The Spark lifecycle (SURVEY.md §3.4):
       → record-aligned slice decode (mapInPandas) → long-format samples
       → [header probe + quarantine, annotation filter, calibration —
          inside the decoder]
-      → one metadata slice scan: per-signal header rows (slice 0 of each
-        file) + per-slice chunk runs (W1 in the scan; record bytes read
-        only for EDF+D), checkpointed once per call
-      → channel registry (band-join dedup, J1-J3), checkpointed
+      → chunk-run slice scan: per-slice contiguous runs (W1 in the scan;
+        record bytes read only for EDF+D), each row carrying its signal's
+        index and unit; checkpointed once per call
+      → channel registry (band-join dedup, J1-J3) over each data signal's
+        first run (index 0), checkpointed
       → cross-file run merge + ONE per-channel aggregate: bounds, count,
         chunk list (A1/A2), broadcast-joined to the registry
       → channels metadata + parquet/JSON sinks
@@ -19,8 +20,7 @@ Replaces the reference's eager single-file pipeline
 one declarative plan; every stage reads header bytes or record-aligned
 byte ranges of the listed files (sources/edf.py), and the only shuffles
 are the spread of slice ids, the registry's and the per-channel
-aggregation — which operate on header rows and run rows, not raw
-samples.
+aggregation — which operate on run rows, not raw samples.
 
 Error handling: the reference swallows decode errors and publishes partial
 output (processor.py:66-69).  Here a malformed file fails its own task and
@@ -42,10 +42,9 @@ from processor_edf_spark.operators.channels import (
 from processor_edf_spark.operators.sessionize import merge_chunk_runs
 from processor_edf_spark.sources.edf import (
     decode_annotations,
-    decode_channel_scan,
+    decode_chunk_runs,
     decode_samples,
     scan_edf_files,
-    split_channel_scan,
 )
 
 
@@ -71,15 +70,14 @@ def process_edf_directory(
     ``file_status(scan_edf_files(spark, input_dir))`` to report the
     quarantined set (the same check, so the same files).
 
-    The channel metadata reads ONE slice scan (``decode_channel_scan``):
-    header rows from slice 0 of every file and chunk-run rows from every
-    slice, with record bytes read only for EDF+D files (contiguous runs
-    follow from the header and the record range).  It is checkpointed
-    lazily for this call only — a later call on a grown directory scans
-    again — and so is the channel registry built from it.  Building the
-    registry's checkpoint runs, before this function returns, the slice
-    spread, the metadata scan itself and the registry's shuffle stages;
-    the returned channels plan has no Python node.
+    The channel metadata reads ONE slice scan, ``decode_chunk_runs``
+    (record bytes read only for EDF+D files: contiguous runs follow from
+    the header and the record range).  It is checkpointed lazily for
+    this call only — a later call on a grown directory scans again — and
+    so is the channel registry built from it.  Building the registry's
+    checkpoint runs, before this function returns, the slice spread, the
+    chunk-run scan itself and the registry's shuffle stages; the returned
+    channels plan has no Python node.
     """
     files = scan_edf_files(spark, input_dir)
     samples = decode_samples(files, quarantine=quarantine)
@@ -88,39 +86,38 @@ def process_edf_directory(
     # is matched by plan, and a file listing compares equal by its root
     # path, so a later call on a grown directory would get this call's
     # rows back.
-    scan = decode_channel_scan(files, quarantine=quarantine).localCheckpoint(eager=False)
-    headers, chunk_runs = split_channel_scan(scan)
-    channels = build_channel_metadata(chunk_runs, headers, existing_channels)
+    chunk_runs = decode_chunk_runs(files, quarantine=quarantine).localCheckpoint(eager=False)
+    channels = build_channel_metadata(chunk_runs, existing_channels)
     return samples, channels, annotations
 
 
 def build_channel_metadata(
     chunk_runs: DataFrame,
-    headers: DataFrame,
     existing_channels: DataFrame | None = None,
 ) -> DataFrame:
     """Channel metadata records mirroring timeseries-channel.schema.json.
 
     Plan shape — NO sample rows move anywhere: gap detection happened
     inside the decode scan (``chunk_run_rows_from_matrix``, one np.diff
-    per signal), so this plan only joins/aggregates O(chunks) run rows
-    and O(signals) header rows; the registry joins are broadcasts.  One
-    per-channel aggregate over the merged chunk runs gives the bounds
-    (A1), the count (A2) — every sample belongs to exactly one run — and
-    the chunk list.
+    per signal), so this plan only joins/aggregates O(chunks) run rows;
+    the registry joins are broadcasts.  One per-channel aggregate over
+    the merged chunk runs gives the bounds (A1), the count (A2) — every
+    sample belongs to exactly one run — and the chunk list.
 
-    ``headers`` needs the ``parse_signal_headers`` columns ``file``,
-    ``signal_idx``, ``label``, ``phy_dim``, ``rate`` and
-    ``is_annotation``; both inputs are read more than once, so pass
-    frames that are cheap to re-read (``process_edf_directory`` passes
-    its checkpointed scan).  Building the registry's checkpoint runs its
-    shuffle stages, and with them the input scans, before this function
+    ``chunk_runs`` is the ``decode_chunk_runs`` table.  Each (file,
+    signal)'s run at ``index = 0`` is its channel's row (name, unit,
+    rate): slice 0 always owns a file's first record, so every signal the
+    decoder emits samples for has exactly one such run, and a signal or
+    file with no samples has none.  The table is read more than once, so
+    pass a frame that is cheap to re-read (``process_edf_directory``
+    passes its checkpointed scan).  Building the registry's checkpoint
+    runs its shuffle stages, and with them the scan, before this function
     returns.
     """
-    signal_dim = headers.filter(~F.col("is_annotation")).select(
+    signal_dim = chunk_runs.filter(F.col("index") == 0).select(
         "file",
         "signal_idx",
-        F.trim(F.col("label")).alias("name"),
+        F.col("channel").alias("name"),
         F.col("phy_dim").alias("unit"),
         "rate",
         F.lit("CONTINUOUS").alias("type"),

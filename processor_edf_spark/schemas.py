@@ -142,8 +142,3 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_table(spark, sf_dir: str, name: str):
-    """Read one driver-provided parquet table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

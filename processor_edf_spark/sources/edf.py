@@ -24,19 +24,20 @@ Spark-first design (NOT a port):
   runs ``probe_header`` on the header it has just read and emits nothing
   for a rejected file, so no plan re-runs the probe or joins against
   ``file_status`` (which stays the report, over the same check).
-- The sample, chunk-run, annotation and channel-metadata scans explode
-  each file into slice ids from its ``length`` alone (a small file is
-  one slice), spread the slice rows round-robin over the session's
-  parallelism, and each task reads the header plus one record-aligned
-  byte range per slice (``ranges_from_header``).  Timestamps do not
-  depend on the split: the contiguous formula uses the global sample
-  index ``rec0·n_i + j``, and EDF+D records each carry their own
-  absolute TAL offset.
-- The channel metadata needs one scan, ``decode_channel_scan``: slice 0
-  of every file emits its per-signal header rows and every slice its
-  chunk runs.  Chunk runs read record bytes only for EDF+D files (the
-  TAL offsets); for EDF and EDF+C they follow from the header and the
-  slice's record range, so the scan reads header bytes alone.
+- The sample, chunk-run and annotation scans explode each file into
+  slice ids from its ``length`` alone (a small file is one slice), spread
+  the slice rows round-robin over the session's parallelism, and each
+  task reads the header plus one record-aligned byte range per slice
+  (``ranges_from_header``).  Timestamps do not depend on the split: the
+  contiguous formula uses the global sample index ``rec0·n_i + j``, and
+  EDF+D records each carry their own absolute TAL offset.
+- The channel metadata reads the chunk-run scan alone: every run row
+  carries its signal's index and unit, so the run at ``index = 0`` of a
+  (file, signal) is that channel's header row, and only a signal the
+  decoder emits samples for has one.  Chunk runs read record bytes only
+  for EDF+D files (the TAL offsets); for EDF and EDF+C they follow from
+  the header and the slice's record range, so the scan reads header
+  bytes alone.
 - The decode itself is a ``mapInPandas`` UDTF.  Inside, decoding is one
   ``np.frombuffer('<i2')`` + a reshape per slice (fully vectorized)
   instead of the reference's per-sample Python loop with O(n²)
@@ -209,41 +210,57 @@ def _signal_offsets(nr_samples: list[int]) -> list[int]:
 
 def _data_signals(h: dict) -> list[int]:
     """Indices of the signals the decoder emits: every non-annotation
-    signal with samples (the annotation filter is reference P1)."""
-    return [
+    signal with samples (the annotation filter is reference P1).
+
+    Raises ``ValueError`` naming the label when two of them share one:
+    their samples would land under one ``(file, channel)`` key.  The
+    status probe runs this same check, so such a file is quarantined
+    instead of decoding into one mixed channel."""
+    signals = [
         i
         for i, label in enumerate(h["labels"])
         if label != ANNOTATION_LABEL and h["nr_samples"][i] > 0
     ]
+    seen = set()
+    for i in signals:
+        if h["labels"][i] in seen:
+            raise ValueError(f"duplicate signal label {h['labels'][i]!r}")
+        seen.add(h["labels"][i])
+    return signals
 
 
-def _tal_offsets_from_matrix(rec: np.ndarray, h: dict) -> np.ndarray | None:
-    """EDF+D per-record start offsets (seconds) from the first TAL of each
-    record's annotation signal (reference edf.py:65-70: the bytes before the
-    first ``\\x14\\x14`` parse as a float offset).  Each data record carries
-    its own TAL, so a record-aligned range is timestamp-self-contained."""
+def _tal_segments(h: dict, rec: np.ndarray) -> list[tuple[bytes, float | None]] | None:
+    """Each record's annotation-signal bytes with the record's start
+    offset in seconds: the bytes before the first ``\\x14\\x14`` parsed as
+    a float (reference edf.py:65-70), ``None`` when they do not parse.
+    ``None`` for a file without an annotation signal.  Each data record
+    carries its own TAL, so a record-aligned range is
+    timestamp-self-contained."""
     try:
         ann_idx = h["labels"].index(ANNOTATION_LABEL)
     except ValueError:
         return None
-    offs = _signal_offsets(h["nr_samples"])
-    a0, n_a = offs[ann_idx], h["nr_samples"][ann_idx]
-    out = np.empty(rec.shape[0], dtype=np.float64)
+    a0, n_a = _signal_offsets(h["nr_samples"])[ann_idx], h["nr_samples"][ann_idx]
+    out = []
     for r in range(rec.shape[0]):
         segment = rec[r, a0 : a0 + n_a].tobytes()
-        head = segment.split(b"\x14\x14")[0]
         try:
-            out[r] = float(head)
+            offset = float(segment.split(b"\x14\x14")[0])
         except ValueError:
-            out[r] = np.nan
+            offset = None
+        out.append((segment, offset))
     return out
 
 
 def _record_offsets_usec(h: dict, rec: np.ndarray) -> np.ndarray | None:
+    """EDF+D per-record start offsets, µs, from each record's TAL head."""
     if not h["is_discontiguous"]:
         return None
-    tal = _tal_offsets_from_matrix(rec, h)
-    return None if tal is None else np.round(tal * USEC).astype(np.int64)
+    segments = _tal_segments(h, rec)
+    if segments is None:
+        return None
+    tal = np.array([o for _, o in segments], dtype=np.float64)  # None → NaN
+    return np.round(tal * USEC).astype(np.int64)
 
 
 def _calibration(h: dict, i: int) -> tuple[float, float]:
@@ -357,7 +374,9 @@ def chunk_run_rows_from_matrix(
 ) -> pd.DataFrame:
     """Per-signal contiguous runs (W1 pushed into the scan) over one
     record-aligned block: one row per gap-free run —
-    ``(file, channel, index, start, end, n_samples, rate)``.
+    ``(file, channel, signal_idx, phy_dim, index, start, end, n_samples,
+    rate)``.  The signal's first run (``index = 0``, in slice 0) is the
+    channel metadata's per-signal row.
 
     Gap detection needs only the block's own timestamp axis — one
     ``np.diff`` per signal — so the scan emits O(chunks) rows instead of
@@ -369,7 +388,8 @@ def chunk_run_rows_from_matrix(
     ``merge_chunk_runs`` exactly like runs of adjacent files do (the
     boundary gap of two contiguous slices is one sampling period, under
     the 2/rate threshold)."""
-    cols = {"file": [], "channel": [], "index": [], "start": [], "end": [], "n_samples": [], "rate": []}
+    cols = {"file": [], "channel": [], "signal_idx": [], "phy_dim": [], "index": [],
+            "start": [], "end": [], "n_samples": [], "rate": []}
     nb_rec = rec.shape[0]
     if nb_rec == 0:
         return pd.DataFrame(cols)
@@ -388,6 +408,8 @@ def chunk_run_rows_from_matrix(
         for s, e in zip(starts, ends):
             cols["file"].append(file_name)
             cols["channel"].append(h["labels"][i])
+            cols["signal_idx"].append(i)
+            cols["phy_dim"].append(h["phy_dim"][i])
             cols["index"].append(int(rec0 * n_i + s))
             cols["start"].append(int(flat[s]))
             cols["end"].append(int(flat[e - 1]))
@@ -437,19 +459,7 @@ def annotation_rows_from_matrix(
     record-aligned block; ``record`` carries the GLOBAL record index
     (``rec0 + local``), so the rows do not depend on the split."""
     cols = {"file": [], "record": [], "offset_sec": [], "raw": []}
-    try:
-        ann_idx = h["labels"].index(ANNOTATION_LABEL)
-    except ValueError:
-        return pd.DataFrame(cols)
-    offs = _signal_offsets(h["nr_samples"])
-    a0, n_a = offs[ann_idx], h["nr_samples"][ann_idx]
-    for r in range(rec.shape[0]):
-        segment = rec[r, a0 : a0 + n_a].tobytes()
-        head = segment.split(b"\x14\x14")[0]
-        try:
-            offset = float(head)
-        except ValueError:
-            offset = None
+    for r, (segment, offset) in enumerate(_tal_segments(h, rec) or []):
         cols["file"].append(file_name)
         cols["record"].append(rec0 + r)
         cols["offset_sec"].append(offset)
@@ -519,10 +529,11 @@ FILE_STATUS_SCHEMA = (
 
 def probe_header(h: dict, length: int) -> int:
     """The structural probe of one parsed header against its file's
-    LENGTH: header validation, the calibration of every decoded signal,
-    and the complete-record count (``record_count``), which it returns.
-    Raises ``ValueError`` with the reason.  Pure: ``status_probe`` and the
-    quarantining scans run it on the header they already read."""
+    LENGTH: header validation, unique labels and a usable calibration
+    for every decoded signal, and the complete-record count
+    (``record_count``), which it returns.  Raises ``ValueError`` with the
+    reason.  Pure: ``status_probe`` and the quarantining scans run it on
+    the header they already read."""
     if h["nb_signal"] <= 0:
         raise ValueError("no signals")
     if h["duration"] <= 0:
@@ -618,7 +629,6 @@ def _map_slices(
     schema,
     *,
     quarantine: bool = False,
-    first_slice: Callable[[str, dict, int], Iterable[pd.DataFrame]] | None = None,
     read_records: Callable[[dict], bool] = lambda h: True,
 ) -> DataFrame:
     """The shape every record scan shares: explode each file into slice
@@ -631,11 +641,9 @@ def _map_slices(
     header the task has already read, so quarantine costs no I/O and no
     extra Python stage.
 
-    ``first_slice(path, header, length)`` frames are emitted once per
-    file, from slice 0, whether or not it owns records.  When
-    ``read_records(header)`` is false the slice's bytes are not read and
-    ``emit`` gets an ``(n_rec, 0)`` matrix: for emitters that need only
-    the record range.
+    When ``read_records(header)`` is false the slice's bytes are not
+    read and ``emit`` gets an ``(n_rec, 0)`` matrix: for emitters that
+    need only the record range.
 
     The explicit round-robin width keeps AQE from coalescing the few KB of
     slice rows into one partition, which would serialize the decode they
@@ -656,8 +664,6 @@ def _map_slices(
                 h = _scan_header(p, n, quarantine)
                 if h is None:
                     continue
-                if k == 0 and first_slice is not None:
-                    yield from first_slice(p, h, n)
                 rec0, n_rec, start, n_bytes = ranges_from_header(h, n, slice_bytes)[k]
                 if n_rec == 0:
                     continue
@@ -690,8 +696,8 @@ def decode_samples(
 
 
 CHUNK_RUNS_SCHEMA = (
-    "file string, channel string, index long, start long, end long, "
-    "n_samples long, rate double"
+    "file string, channel string, signal_idx int, phy_dim string, index long, "
+    "start long, end long, n_samples long, rate double"
 )
 
 
@@ -711,61 +717,6 @@ def decode_chunk_runs(files: DataFrame, *, quarantine: bool = False) -> DataFram
         CHUNK_RUNS_SCHEMA,
         quarantine=quarantine,
         read_records=_needs_records,
-    )
-
-
-# The header fields the channel metadata reads (a subset of
-# SIGNAL_HEADERS_SCHEMA) and the chunk-run columns, as one frame: a header
-# row has ``label`` set and ``channel`` null, a run row the reverse.
-_HEADER_FIELDS = ["file", "signal_idx", "label", "phy_dim", "rate", "is_annotation"]
-_CHUNK_RUN_FIELDS = ["file", "channel", "index", "start", "end", "n_samples", "rate"]
-CHANNEL_SCAN_SCHEMA = (
-    "file string, signal_idx int, label string, phy_dim string, "
-    "is_annotation boolean, channel string, index long, start long, end long, "
-    "n_samples long, rate double"
-)
-_CHANNEL_SCAN_COLUMNS = [f.split()[0] for f in CHANNEL_SCAN_SCHEMA.split(", ")]
-
-
-def _channel_scan_rows(frame: pd.DataFrame) -> pd.DataFrame:
-    """``frame`` as CHANNEL_SCAN_SCHEMA rows: the columns it lacks are
-    null."""
-    return pd.DataFrame(
-        {
-            c: frame[c] if c in frame.columns else pd.Series([None] * len(frame), dtype=object)
-            for c in _CHANNEL_SCAN_COLUMNS
-        }
-    )
-
-
-def decode_channel_scan(files: DataFrame, *, quarantine: bool = False) -> DataFrame:
-    """File listing → everything the channel metadata reads, from ONE
-    slice scan: header rows (one per signal, emitted by slice 0 of every
-    file, records or not) and run rows (the ``decode_chunk_runs`` rows of
-    every slice).  Record bytes are read only for EDF+D files.
-    ``split_channel_scan`` separates the two kinds."""
-    return _map_slices(
-        files,
-        lambda *block: [_channel_scan_rows(chunk_run_rows_from_matrix(*block))],
-        CHANNEL_SCAN_SCHEMA,
-        quarantine=quarantine,
-        first_slice=lambda p, h, n: [
-            _channel_scan_rows(signal_header_rows(p, h, n)[_HEADER_FIELDS])
-        ],
-        read_records=_needs_records,
-    )
-
-
-def split_channel_scan(scan: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """``decode_channel_scan`` rows → ``(headers, chunk_runs)``: the
-    header columns ``build_channel_metadata`` reads from
-    ``parse_signal_headers`` and the ``decode_chunk_runs`` table.  The
-    kinds are told apart by a null test, which the optimizer does not
-    count as a selective filter, so no runtime bloom-filter job is
-    planned for the joins that read them."""
-    return (
-        scan.filter(F.col("label").isNotNull()).select(*_HEADER_FIELDS),
-        scan.filter(F.col("channel").isNotNull()).select(*_CHUNK_RUN_FIELDS),
     )
 
 
@@ -813,8 +764,3 @@ def parse_tal_annotations(annotations: DataFrame) -> DataFrame:
         )
         .filter(F.col("text") != "")
     )
-
-
-def with_timestamp_view(samples: DataFrame) -> DataFrame:
-    """Add a TimestampType view of t_usec (canonical stays int64 µs)."""
-    return samples.withColumn("ts", F.timestamp_micros("t_usec"))

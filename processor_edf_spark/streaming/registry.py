@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-RATE_BAND = 0.02
+from processor_edf_spark.operators.channels import RATE_BAND
 
 REGISTRY_OUTPUT_SCHEMA = T.StructType(
     [

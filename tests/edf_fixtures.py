@@ -89,7 +89,7 @@ def write_edf(
             record_offsets_sec[r] if record_offsets_sec is not None else r * duration
         )
         for s, nr in zip(signals, nrs):
-            t = rec_offset + np.arange(nr) * (duration / nr)
+            t = rec_offset + np.arange(nr) * (duration / max(nr, 1))  # nr may be 0
             phys = np.asarray(s["gen"](t), dtype=np.float64)
             dig = np.clip(np.round(phys / gain), dig_min, dig_max).astype("<i2")
             records.append(dig.tobytes())

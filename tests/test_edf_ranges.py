@@ -277,6 +277,26 @@ def test_ranged_annotations_parity(spark, monkeypatch, edfc_dir, edfd_dir):
     assert len(_reference(edfd_dir, "annotations")) == 200
 
 
+def test_unparseable_tal_head_gives_null_offset(spark, tmp_path):
+    """A record whose TAL head does not parse as a number keeps its raw
+    segment with a null ``offset_sec`` (not NaN); the other records keep
+    their offsets."""
+    from processor_edf_spark.sources.edf import decode_annotations
+
+    d = tmp_path / "tal"
+    d.mkdir()
+    path = str(d / "d.edf")
+    write_edf_fast(path, n_signals=1, rate=16, nb_rec=3, variant="EDF+D", gap_every=2, gap_sec=1.0)
+    h, _ = _header(path)
+    raw = bytearray(open(path, "rb").read())
+    head = h["header_bytes"] + 2 * sum(h["nr_samples"]) + 2 * h["nr_samples"][0]  # record 1
+    raw[head : head + 2] = b"xx"
+    open(path, "wb").write(bytes(raw))
+    rows = decode_annotations(scan_edf_files(spark, str(d))).orderBy("record").collect()
+    assert [r["offset_sec"] for r in rows] == [0.0, None, 3.0]
+    assert rows[1]["raw"][:2] == b"xx"
+
+
 def test_ranged_headers_parity(spark, edfc_dir, edfd_dir):
     from processor_edf_spark.sources.edf import parse_signal_headers
 
@@ -500,8 +520,8 @@ def test_slice_fuzz_decode_equals_reference(
 def test_zero_record_files_keep_headers_and_channels(spark, monkeypatch, tmp_path):
     """Files with a parseable header but NO decodable records — declared
     nb_data_rec = 0, or truncated below one record — keep their
-    signal-header and channel rows and decode no samples, at any slice
-    size."""
+    signal-header rows but yield no channel rows and decode no samples,
+    at any slice size."""
     from processor_edf_spark.pipeline import process_edf_directory
     from processor_edf_spark.sources.edf import parse_signal_headers
 
@@ -541,20 +561,14 @@ def test_zero_record_files_keep_headers_and_channels(spark, monkeypatch, tmp_pat
     assert channels[0] == channels[1]
 
 
-def test_channel_scan_equals_header_and_chunk_run_scans(spark, monkeypatch, tmp_path):
-    """The one metadata scan of process_edf_directory, with quarantine
-    on: its header rows equal parse_signal_headers' (each file's once,
-    records or not) and its run rows equal decode_chunk_runs', on a
-    multi-slice EDF+D file, an EDF+C file, a multi-slice file that
-    declares zero records, a file truncated below one record and a
-    quarantined file."""
-    from processor_edf_spark.sources.edf import (
-        _HEADER_FIELDS,
-        decode_channel_scan,
-        decode_chunk_runs,
-        parse_signal_headers,
-        split_channel_scan,
-    )
+def test_first_chunk_runs_equal_data_signal_headers(spark, monkeypatch, tmp_path):
+    """The channel metadata's per-signal rows are the ``index = 0`` runs
+    of decode_chunk_runs: with quarantine on, at a splitting and at the
+    default slice size, they equal the data-signal rows of
+    parse_signal_headers (one per signal) on a multi-slice EDF+D file and
+    an EDF+C file, and a multi-slice file that declares zero records, a
+    file truncated below one record and a quarantined file yield none."""
+    from processor_edf_spark.sources.edf import decode_chunk_runs, parse_signal_headers
 
     d = tmp_path / "scan"
     d.mkdir()
@@ -573,24 +587,104 @@ def test_channel_scan_equals_header_and_chunk_run_scans(spark, monkeypatch, tmp_
     raw[256 + 104 : 256 + 112] = raw[256 + 112 : 256 + 120]  # phy_min = phy_max
     (d / "flat.edf").write_bytes(bytes(raw))
 
-    slice_bytes = 2 * 1024
-    monkeypatch.setattr(edf_mod, "SLICE_BYTES", slice_bytes)
+    files = scan_edf_files(spark, str(d))
+    cols = ["file", "signal_idx", "channel", "phy_dim", "rate"]
+    headers = parse_signal_headers(files, quarantine=True).withColumnRenamed("label", "channel")
+    want = sorted(map(tuple, headers.filter(~F.col("is_annotation") & (F.col("nb_data_rec") > 0))
+                      .select(*cols).collect()))
+    assert {r[0] for r in want} == {"d.edf", "c.edf"}
+    assert len(want) == 2 + 3
     for name in ("d.edf", "zero.edf"):
         h, length = _header(str(d / name))
-        assert len(ranges_from_header(h, length, slice_bytes)) > 1, name
+        assert len(ranges_from_header(h, length, 2 * 1024)) > 1, name
+    for slice_bytes in (2 * 1024, edf_mod.SLICE_BYTES):
+        monkeypatch.setattr(edf_mod, "SLICE_BYTES", slice_bytes)
+        runs = decode_chunk_runs(files, quarantine=True)
+        got = sorted(map(tuple, runs.filter(F.col("index") == 0).select(*cols).collect()))
+        assert got == want, slice_bytes
 
-    files = scan_edf_files(spark, str(d))
-    headers, runs = split_channel_scan(decode_channel_scan(files, quarantine=True))
 
-    def rows(df):
-        return sorted(map(tuple, df.collect()), key=repr)
+def test_zero_sample_signal_yields_no_channel(spark, tmp_path):
+    """A file the probe passes, with one non-annotation signal declaring
+    ``nr_samples = 0``: with quarantine on the file processes, and that
+    signal yields no channel and no samples (its zero rate never reaches
+    the registry's rate-band division)."""
+    from processor_edf_spark.pipeline import channel_dicts, process_edf_directory
+    from processor_edf_spark.sources.edf import file_status
 
-    want_headers = rows(parse_signal_headers(files, quarantine=True).select(*_HEADER_FIELDS))
-    assert rows(headers) == want_headers
-    assert {r[0] for r in want_headers} == {"d.edf", "c.edf", "zero.edf", "trunc.edf"}
-    want_runs = rows(decode_chunk_runs(files, quarantine=True))
-    assert rows(runs) == want_runs
-    assert {r[0] for r in want_runs} == {"d.edf", "c.edf"}
+    d = tmp_path / "zs"
+    d.mkdir()
+    write_edf(
+        str(d / "z.edf"),
+        signals=[
+            {"label": "EEG", "unit": "uV", "rate": 64, "gen": sine(2.0)},
+            {"label": "Empty", "unit": "uV", "rate": 0, "gen": sine(1.0)},
+        ],
+        nb_data_rec=4,
+    )
+    (status,) = file_status(scan_edf_files(spark, str(d))).collect()
+    assert status["ok"], status["error"]
+    samples, channels, _ = process_edf_directory(spark, str(d), quarantine=True)
+    dicts = channel_dicts(channels)
+    assert [(c["name"], c["id"]) for c in dicts] == [("EEG", "z.edf#0")]
+    assert {r["channel"] for r in samples.select("channel").distinct().collect()} == {"EEG"}
+    _assert_matches_reference(samples, str(d))
+
+
+def test_zero_record_file_gives_no_channel_its_id_or_unit(spark, tmp_path):
+    """A file declaring zero records beside a file with samples, both
+    with an ``EEG`` signal at one rate: the channel is the one with
+    samples — ``b.edf#0`` in ``uV`` — not the empty file's ``a.edf#0``
+    in ``mV``."""
+    from processor_edf_spark.pipeline import channel_dicts, process_edf_directory
+
+    d = tmp_path / "zb"
+    d.mkdir()
+    write_edf(str(d / "a.edf"), [{"label": "EEG", "unit": "mV", "rate": 256, "gen": sine(1.0)}],
+              nb_data_rec=0)
+    write_edf(str(d / "b.edf"), [{"label": "EEG", "unit": "uV", "rate": 256, "gen": sine(1.0)}],
+              nb_data_rec=1)
+    _, channels, _ = process_edf_directory(spark, str(d), quarantine=True)
+    (ch,) = channel_dicts(channels)
+    (row,) = channels.select("id", "num_values").collect()
+    assert (row["id"], ch["unit"], row["num_values"]) == ("b.edf#0", "uV", 256)
+
+
+def test_duplicate_data_signal_labels_quarantine_the_file(spark, tmp_path):
+    """Two non-annotation signals sharing a label (64 and 32 samples per
+    record) would put both under one ``(file, channel)`` key: the probe
+    rejects the file with a reason naming the label, so quarantine drops
+    it and file_status reports it, while a file with several
+    ``EDF Annotations`` signals stays accepted."""
+    from processor_edf_spark.pipeline import process_edf_directory
+    from processor_edf_spark.sources.edf import file_status, probe_header
+
+    d = tmp_path / "dup"
+    d.mkdir()
+    write_edf(
+        str(d / "dup.edf"),
+        signals=[
+            {"label": "EEG", "unit": "uV", "rate": 64, "gen": sine(2.0)},
+            {"label": "EEG", "unit": "uV", "rate": 32, "gen": sine(3.0)},
+        ],
+        nb_data_rec=4,
+    )
+    write_edf(str(d / "ok.edf"), [{"label": "EOG", "unit": "uV", "rate": 16, "gen": sine(1.0)}],
+              nb_data_rec=4)
+    status = {r["file"]: r for r in file_status(scan_edf_files(spark, str(d))).collect()}
+    assert status["ok.edf"]["ok"]
+    assert not status["dup.edf"]["ok"] and "'EEG'" in status["dup.edf"]["error"]
+
+    samples, channels, _ = process_edf_directory(spark, str(d), quarantine=True)
+    assert [(r["id"], r["num_values"]) for r in channels.collect()] == [("ok.edf#0", 64)]
+    assert {r["file"] for r in samples.select("file").distinct().collect()} == {"ok.edf"}
+
+    h, length = _header(str(d / "ok.edf"))
+    for key in ("labels", "nr_samples", "phy_dim", "phy_min", "phy_max", "dig_min", "dig_max"):
+        h[key] = h[key] * 3
+    h["labels"][1:] = ["EDF Annotations"] * 2
+    h["nb_signal"] = 3
+    assert probe_header(h, 10**6) > 0
 
 
 def test_contiguous_chunk_runs_need_no_record_bytes(edfc_dir):

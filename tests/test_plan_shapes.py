@@ -879,8 +879,8 @@ def test_edf_quarantine_plans_have_no_probe(spark, edf_quarantine_dir):
     probe on the header it reads anyway, so the samples and annotations
     plans are one Python scan each and no plan joins the listing against
     a status table on ``path``.  The channels plan has no Python node:
-    its one metadata scan (header and chunk-run rows) lives in the
-    call's checkpoint, which it reads."""
+    its one metadata scan (the chunk runs) lives in the call's
+    checkpoint, which it reads."""
     from processor_edf_spark.pipeline import process_edf_directory
 
     samples, channels, annotations = process_edf_directory(
