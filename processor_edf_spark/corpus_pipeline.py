@@ -128,33 +128,30 @@ def run_corpus_job(
     survivors = lsh_dedup_survivors(bucketed, id_col="doc_id")
     near = exact.join(survivors.select("doc_id"), "doc_id")
 
-    # Per-stage accounting in ONE aggregation pass instead of one
-    # count() per stage: membership in each stage is a boolean over the
-    # checkpointed gated frame (survivors ⊆ exact keeps by
-    # construction, so the near flag only counts where the exact flag
-    # holds).  Stage exactness is unchanged — the flags encode the very
-    # joins the stage frames run — but the audit now costs one shuffle
-    # over gated instead of three full stage recomputations.
+    # Per-stage accounting in one aggregation pass over the checkpointed
+    # gated frame instead of one count() per stage: membership in the
+    # exact stage is a flag from the very join that stage runs.  The
+    # near stage is the survivor count itself: survivors hold one
+    # distinct doc_id per component and are drawn from the exact keeps
+    # by construction.  Counting them on their own, rather than joining
+    # them back to gated, saves that join and its shuffle; it also
+    # leaves the report's final plan without a join whose strategy AQE
+    # picks at run time, so repeated calls reuse its generated classes.
     audited = gated.join(
         exact_keep.withColumn("_ex", F.lit(1)), "doc_id", "left"
-    ).join(
-        survivors.select("doc_id").withColumn("_nr", F.lit(1)),
-        "doc_id",
-        "left",
     )
     aggs = [
         F.count(F.lit(1)).alias("n1"),
         F.count("_ex").alias("n2"),
-        F.count(F.when(F.col("_ex").isNotNull(), F.col("_nr"))).alias(
-            "n3"
-        ),
     ]
     if clf_keep is not None:
         audited = audited.join(
             clf_keep.withColumn("_cl", F.lit(1)), "doc_id", "left"
         )
         aggs.append(F.count("_cl").alias("n1c"))
-    counts = audited.agg(*aggs)
+    counts = audited.agg(*aggs).crossJoin(
+        survivors.agg(F.count(F.lit(1)).alias("n3"))
+    )
 
     # 4. PII scrub + split assignment (projections, no shuffle) — the
     # EXACT split_assignment query construction, so pipeline membership

@@ -121,10 +121,10 @@ def connected_components(
                 ).alias("comp"),
             )
         )
-        # converged when no node's component changed this round
-        changed = (
-            new_comp.filter(F.col("comp") != F.col("old")).limit(1).count()
-        )
+        # converged when no node's component changed this round.  A plain
+        # count, not limit(1): a codegen'd LIMIT names its counter from a
+        # JVM-global id, so every round would compile a new class.
+        changed = new_comp.filter(F.col("comp") != F.col("old")).count()
         comp = new_comp.select("node", "comp")
         if changed == 0:
             break

@@ -48,6 +48,18 @@ def get_spark(app_name: str = "processor_edf_spark", cpus: int | None = None) ->
         # 128 MiB scan splits — the parquet-side default that keeps a 100 TB
         # scan at ~800k tasks rather than millions of tiny ones.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Compile each generated class once per session.  The engine runs
+        # the same plans pass after pass, and one pass's working set of
+        # distinct whole-stage and projection classes is ~95-104 for an
+        # EDF append pass (decode, status, channel metadata, sinks), ~88
+        # for corpus_job_report and ~140 for a dedup query pass.  At the
+        # default of 100 entries the LRU cache evicts classes before the
+        # next pass asks for them again, so every warm pass re-ran Janino
+        # (29 classes per EDF pass, ~127 per dedup pass, at local[2]) and
+        # then class loading and JIT for code it already had.  1000 holds
+        # several workloads' sets; the cache maps generated source to its
+        # compiled class, so no output can change.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # One BLAS thread per python worker (r15): every executor runs
         # one worker per task slot, so letting OpenBLAS/MKL spawn a
         # thread pool per worker oversubscribes cores cores×threads —

@@ -252,15 +252,21 @@ def _tal_segments(h: dict, rec: np.ndarray) -> list[tuple[bytes, float | None]] 
     return out
 
 
-def _record_offsets_usec(h: dict, rec: np.ndarray) -> np.ndarray | None:
-    """EDF+D per-record start offsets, µs, from each record's TAL head."""
-    if not h["is_discontiguous"]:
-        return None
-    segments = _tal_segments(h, rec)
+def _timed_records(h: dict, rec: np.ndarray) -> tuple[np.ndarray, np.ndarray | None]:
+    """The block's records that have a start time, with their EDF+D start
+    offsets in µs from each record's TAL head (``None`` for a file whose
+    timestamps follow from the header alone).  An EDF+D record whose TAL
+    head does not parse has no start time, so its samples are dropped
+    here, for the sample decode and the chunk runs alike; its annotation
+    row keeps ``offset_sec`` null."""
+    segments = _tal_segments(h, rec) if h["is_discontiguous"] else None
     if segments is None:
-        return None
-    tal = np.array([o for _, o in segments], dtype=np.float64)  # None → NaN
-    return np.round(tal * USEC).astype(np.int64)
+        return rec, None
+    offsets = [o for _, o in segments]
+    if None in offsets:
+        rec = rec[[o is not None for o in offsets]]
+        offsets = [o for o in offsets if o is not None]
+    return rec, np.round(np.array(offsets, dtype=np.float64) * USEC).astype(np.int64)
 
 
 def _calibration(h: dict, i: int) -> tuple[float, float]:
@@ -326,12 +332,12 @@ def _decode_block(
     """Decode one record-aligned block (``rec`` = int16 matrix of records
     ``rec0 … rec0+len(rec)``) into long-format sample batches with
     SAMPLES_SCHEMA columns."""
+    rec, rec_offsets_usec = _timed_records(h, rec)
     nb_rec = rec.shape[0]
     if nb_rec == 0:
         return
     start_usec = edf_start_usec(h["start_date"], h["start_time"])
     offs = _signal_offsets(h["nr_samples"])
-    rec_offsets_usec = _record_offsets_usec(h, rec)
 
     for i in _data_signals(h):
         label = h["labels"][i]
@@ -384,17 +390,18 @@ def chunk_run_rows_from_matrix(
     aggregate-pushdown analog of the reference's in-process
     ``discontinuous_chunks`` (timeseries/base.py:322-342).  ``index`` is
     the run start's GLOBAL position in the channel's sample array
-    (``rec0·n_i + local``); runs of adjacent slices merge downstream in
-    ``merge_chunk_runs`` exactly like runs of adjacent files do (the
-    boundary gap of two contiguous slices is one sampling period, under
-    the 2/rate threshold)."""
+    (``rec0·n_i + local``, where ``local`` counts only the block's timed
+    records, see ``_timed_records``); runs of adjacent slices merge
+    downstream in ``merge_chunk_runs`` exactly like runs of adjacent
+    files do (the boundary gap of two contiguous slices is one sampling
+    period, under the 2/rate threshold)."""
     cols = {"file": [], "channel": [], "signal_idx": [], "phy_dim": [], "index": [],
             "start": [], "end": [], "n_samples": [], "rate": []}
+    rec, rec_offsets_usec = _timed_records(h, rec)
     nb_rec = rec.shape[0]
     if nb_rec == 0:
         return pd.DataFrame(cols)
     start_usec = edf_start_usec(h["start_date"], h["start_time"])
-    rec_offsets_usec = _record_offsets_usec(h, rec)
     for i in _data_signals(h):
         n_i = h["nr_samples"][i]
         rate = n_i / h["duration"]

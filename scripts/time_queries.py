@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Isolated per-query timing with the bench's exact methodology (one
 warm-up run, one timed run, noop sink) for quick before/after checks.
+Each timed run also prints how many generated classes it compiled.
 
 Usage: python scripts/time_queries.py [--sf DIR] [--reps N] name [name...]
 """
@@ -37,13 +38,21 @@ def main() -> None:
         else:
             names.append(a)
     spark = get_spark("time_queries", cpus=cpus)
+    # Spark's count of generated classes compiled by Janino: a warm run
+    # that compiles any has fallen out of the codegen cache.
+    compiled = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     for name in names:
         fn = QUERIES[name]
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         for _ in range(reps):
+            c0 = compiled.getCount()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            print(f"{name}: {time.perf_counter() - t0:.3f}s", flush=True)
+            print(
+                f"{name}: {time.perf_counter() - t0:.3f}s"
+                f" compiled {compiled.getCount() - c0} classes",
+                flush=True,
+            )
     spark.stop()
 
 

@@ -297,6 +297,35 @@ def test_unparseable_tal_head_gives_null_offset(spark, tmp_path):
     assert rows[1]["raw"][:2] == b"xx"
 
 
+def test_unparseable_tal_head_drops_its_record(spark, tmp_path):
+    """An EDF+D record whose TAL head does not parse has no start time:
+    its samples are dropped from the sample decode and from the chunk
+    runs alike, instead of carrying int64-min timestamps.  Records 0 and
+    2 keep their reference timestamps and values, and the runs still
+    count every emitted sample, starting at ``index = 0``."""
+    from processor_edf_spark.sources.edf import decode_chunk_runs
+
+    d = tmp_path / "tal"
+    d.mkdir()
+    path = str(d / "d.edf")
+    write_edf_fast(path, n_signals=1, rate=16, nb_rec=3, variant="EDF+D", gap_every=2, gap_sec=1.0)
+    want = read_edf(path)["samples"]
+    h, _ = _header(path)
+    raw = bytearray(open(path, "rb").read())
+    head = h["header_bytes"] + 2 * sum(h["nr_samples"]) + 2 * h["nr_samples"][0]  # record 1
+    raw[head : head + 2] = b"xx"
+    open(path, "wb").write(bytes(raw))
+    n = h["nr_samples"][0]
+    want = want.iloc[np.r_[0:n, 2 * n : 3 * n]]
+
+    files = scan_edf_files(spark, str(d))
+    samples = decode_samples(files).toPandas().astype({"file": str, "channel": str})
+    _assert_same_samples(samples, want)
+    runs = decode_chunk_runs(files).toPandas()
+    assert runs["n_samples"].sum() == len(samples)
+    assert 0 in set(runs["index"])
+
+
 def test_ranged_headers_parity(spark, edfc_dir, edfd_dir):
     from processor_edf_spark.sources.edf import parse_signal_headers
 

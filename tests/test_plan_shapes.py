@@ -950,6 +950,56 @@ def test_edf_append_metadata_job_count(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def test_warm_rounds_compile_no_code(spark, tmp_path):
+    """Once a round of the EDF append pass and corpus_job_report has run,
+    a second round of the EDF pass compiles no generated class: the
+    session's codegen cache holds both working sets.  At Spark's default
+    of 100 entries the two evict each other's classes, and every round
+    recompiled all of them: 91 in the EDF pass, 88 in corpus_job_report.
+    corpus_job_report keeps a small allowance: when both sides of a
+    connected-components label join are small, AQE picks the side to
+    broadcast at run time from the stages that have finished, and it
+    numbers whole-stage classes in the order it plans them; a pick or a
+    numbering it has not made before is new source (3-6 classes in a
+    round)."""
+    from processor_edf_spark.pipeline import channel_dicts, process_edf_directory
+    from processor_edf_spark.sinks.writers import write_annotations_json, write_reference_compatible
+    from processor_edf_spark.sources.edf import file_status, scan_edf_files
+    from tests.edf_fixtures import write_edf_fast
+
+    edf = tmp_path / "edf"
+    edf.mkdir()
+    for i in range(3):
+        write_edf_fast(str(edf / f"f{i}.edf"), n_signals=2, rate=64, nb_rec=20,
+                       variant="EDF+D", gap_every=7, gap_sec=3.0)
+    registry = spark.createDataFrame(
+        [("ch-1", "CH00", 64.0, "CONTINUOUS")], "id string, name string, rate double, type string"
+    )
+    compilations = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+
+    def one_round(k: int) -> tuple[int, int]:
+        """Classes compiled by the EDF pass and by corpus_job_report."""
+        out = tmp_path / f"out{k}"
+        c0 = compilations.getCount()
+        samples, channels, annotations = process_edf_directory(
+            spark, str(edf), existing_channels=registry, quarantine=True
+        )
+        file_status(scan_edf_files(spark, str(edf))).collect()
+        dicts = channel_dicts(channels)
+        write_reference_compatible(samples, dicts, str(out / "reference"))
+        write_annotations_json(annotations, str(out / "annotations"))
+        c1 = compilations.getCount()
+        QUERIES["corpus_job_report"](spark, SF_SMALL).write.parquet(str(out / "report"))
+        return c1 - c0, compilations.getCount() - c1
+
+    one_round(0)
+    edf_classes, report_classes = one_round(1)
+    assert edf_classes == 0
+    assert report_classes <= 10, report_classes
+
+
 def test_annotations_sink_keeps_decode_parallel(spark, edf_quarantine_dir, tmp_path):
     """write_annotations_json: one shuffle to a single partition AFTER the
     TAL parse — no ``Coalesce 1`` above the annotation MapInPandas, which
