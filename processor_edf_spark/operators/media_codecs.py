@@ -924,10 +924,6 @@ def _webp_chunk_kind(payload: bytes) -> str | None:
     return None
 
 
-def _has_vp8l_chunk(payload: bytes) -> bool:
-    return _webp_chunk_kind(payload) == "VP8L"
-
-
 def decode_webp(payload: bytes) -> np.ndarray:
     """WebP → HxWx3 uint8 RGB via a registered plugin, else the
     pure-python VP8L plugin for LOSSLESS payloads, the pure-python VP8
@@ -1049,10 +1045,6 @@ def decode_h264_video(payload: bytes) -> tuple[int, int, list]:
         return plugin(payload)
     _require_optional("h264_ipcm")
     raise AssertionError("unreachable: h264_ipcm plugin registered at import")
-
-
-def _is_webp(payload: bytes) -> bool:
-    return payload[:4] == b"RIFF" and payload[8:12] == b"WEBP"
 
 
 def _is_mp3(payload: bytes) -> bool:

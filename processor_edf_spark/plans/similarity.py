@@ -330,15 +330,6 @@ def _band_bucket_sql(e: str, band: int) -> str:
     return f"({bits})"
 
 
-def _band_bucket_col(e, band: int) -> Column:
-    bits = None
-    for j in range(BITS_PER_BAND):
-        w = F.array(*[F.lit(x) for x in _PLANES[band * BITS_PER_BAND + j]])
-        term = F.when(dot(e, w) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        bits = term if bits is None else bits + term
-    return bits
-
-
 _PLANES_ARR = np.array(_PLANES, dtype=np.float64)  # (N_HYPERPLANES, EMB_DIM)
 
 
@@ -348,7 +339,7 @@ def _band_buckets_pd(e: pd.Series) -> pd.Series:
     r15 replacement for 16 per-row interpreted ``dot`` folds (zip_with +
     aggregate HOFs run outside codegen).  The hyperplane dot products
     accumulate with an explicit left-to-right dimension loop, the exact
-    float fold of the Column path and DuckDB's list_inner_product (the
+    float fold of the Column ``dot`` and DuckDB's list_inner_product (the
     ``dot_pd`` discipline), so every sign bit — and therefore the
     bucketing and the result set — is unchanged bit-for-bit."""
     E = np.vstack(e.to_numpy())
@@ -421,7 +412,7 @@ def _lsh_pair_frame(spark, sf_dir):
         "vec_id", _as_double("embedding").alias("e")
     )
     # one ArrowEvalPython node computes all four band buckets per row
-    # (bit-identical to the per-band Column folds — see _band_buckets_pd)
+    # (bit-identical to per-band Column ``dot`` folds — see _band_buckets_pd)
     sig = emb.select(
         "vec_id", "e", _band_buckets_pd(F.col("e")).alias("bks")
     ).select(

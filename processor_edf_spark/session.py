@@ -60,6 +60,17 @@ def get_spark(app_name: str = "processor_edf_spark", cpus: int | None = None) ->
         # several workloads' sets; the cache maps generated source to its
         # compiled class, so no output can change.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Fork Python workers from the engine's daemon (_daemon.py).
+        # PySpark runs importlib.invalidate_caches() before every task,
+        # and on CPython 3.11 each of a worker's 16 zip importers
+        # (pyspark.zip, py4j, the spark-core jar) then re-reads its whole
+        # archive: 0.12-0.25 CPU-s per task in a local[2] worker on a
+        # 4-vCPU VM, more than decoding a small EDF slice.  The daemon
+        # re-reads an archive only when its stat key changes (~0.0002
+        # CPU-s per task) and imports the package once before forking.
+        # Executors must be able to import processor_edf_spark when the
+        # daemon starts.
+        .config("spark.python.daemon.module", "processor_edf_spark._daemon")
         # One BLAS thread per python worker (r15): every executor runs
         # one worker per task slot, so letting OpenBLAS/MKL spawn a
         # thread pool per worker oversubscribes cores cores×threads —

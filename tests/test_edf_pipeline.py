@@ -11,6 +11,7 @@ processor/base_processor/timeseries/tests.py):
 """
 
 import math
+import os
 
 import numpy as np
 import pytest
@@ -23,9 +24,39 @@ from tests.edf_fixtures import sine, write_edf
 USEC = 1_000_000
 
 
+def _write_sample_data(directory) -> str:
+    """Files equivalent to the reference's sample_data: ``test.edf``, EDF+C
+    with 11 data channels of 120 000 values at 200 Hz and an annotation
+    signal, and ``sin_wave.edf``, 400·sin at 10 and 20 Hz sampled at
+    800 Hz, 12 000 values each."""
+    write_edf(
+        str(directory / "test.edf"),
+        signals=[
+            {"label": f"EEG {i:02d}", "rate": 200, "gen": sine(1.0 + i)} for i in range(11)
+        ],
+        nb_data_rec=600,
+        record_offsets_sec=[float(r) for r in range(600)],
+    )
+    write_edf(
+        str(directory / "sin_wave.edf"),
+        signals=[
+            {"label": "Sin 10Hz", "rate": 800, "gen": sine(10.0)},
+            {"label": "Sin 20Hz", "rate": 800, "gen": sine(20.0)},
+        ],
+        nb_data_rec=15,
+    )
+    return str(directory)
+
+
 @pytest.fixture(scope="module")
 def edf_outputs(spark, tmp_path_factory):
-    samples, channels, annotations = process_edf_directory(spark, REFERENCE_SAMPLES)
+    """The reference's sample_data where it exists, else files written to
+    match it."""
+    if os.path.isdir(REFERENCE_SAMPLES):
+        sample_dir = REFERENCE_SAMPLES
+    else:
+        sample_dir = _write_sample_data(tmp_path_factory.mktemp("sample_data"))
+    samples, channels, annotations = process_edf_directory(spark, sample_dir)
     samples = samples.cache()
     return samples, channels.cache(), annotations
 
